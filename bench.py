@@ -119,8 +119,8 @@ def main() -> None:
     # measure steady-state query cost, never a one-time index/bronze
     # build that happened to land on it (the round-9 streaming
     # "regression" was a layout-version rebuild billed to the first
-    # streaming query). Builders are mtime-guarded — on a warm stage
-    # this costs ~1 s of freshness probes.
+    # streaming query). Staged artifacts carry a freshness marker — on
+    # a warm stage this costs only the marker probes.
     staging_sec = 0.0
     staging_detail: dict[str, float] = {}
     staging_failed = False
@@ -128,8 +128,8 @@ def main() -> None:
     try:
         from nyc_opendata_etl_spark.sources.staging import stage_all
 
-        for label, dt in stage_all(spark, sf_dir):
-            staging_detail[label] = round(dt, 3)
+        for kind, dt in stage_all(spark, sf_dir):
+            staging_detail[kind] = round(dt, 3)
     except Exception as e:  # noqa: BLE001
         # A partial failure must not report staging as free: keep the
         # time already spent and flag it, so a cross-round bench diff

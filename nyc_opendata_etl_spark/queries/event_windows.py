@@ -18,98 +18,27 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nyc_opendata_etl_spark.queries import register
+from nyc_opendata_etl_spark.sources.staging import staged, write_ordered
 from nyc_opendata_etl_spark.sources.tables import load_table
 from nyc_opendata_etl_spark.streaming import events as streaming_events
 
-def _stage_events(spark: SparkSession, sf_dir: str) -> str:
-    """Stage a micro-batchable, TIME-ORDERED copy of the events table
-    (the raw file has TIMESTAMP(NANOS), unreadable by the streaming
-    parquet source; staging ≙ the bronze layer a real pipeline would
-    stream from). Cached by mtime: re-staged only when the source is
-    newer.
+@staged("events_stream", "events")
+def _stage_events(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """A micro-batchable, TIME-ORDERED copy of the events table (the
+    raw file has TIMESTAMP(NANOS), unreadable by the streaming parquet
+    source; staging ≙ the bronze layer a real pipeline would stream
+    from).
 
     Time order matters: FileStreamSource replays files by modification
-    time, so range-partitioning on ``ts`` + an ascending mtime touch in
-    path order (part numbering == range order for repartitionByRange)
-    makes a multi-batch replay see events in event-time order — zero
-    cross-batch lateness, so ``maxFilesPerTrigger`` replays are
-    output-identical to the single-batch drain while the advancing
-    watermark evicts join/agg state between micro-batches. Without the
-    ordering, the watermark could race ahead of later files and
-    (correctly, per streaming semantics) drop their rows. The
-    ``_ORDERED`` marker versions the layout so pre-ordering stage dirs
-    rebuild once."""
-    import hashlib
-
-    from nyc_opendata_etl_spark.sources.staging import stage_root
-
-    key = hashlib.md5(sf_dir.rstrip("/").encode()).hexdigest()[:12]
-    stage = os.path.join(
-        stage_root(),
-        "spark_graft_stream_stage",
-        f"{os.path.basename(sf_dir.rstrip('/'))}_{key}",
-    )
-    src = os.path.join(sf_dir, "events.parquet")
-    marker = os.path.join(stage, "_SUCCESS")
-    ordered_marker = os.path.join(stage, "_ORDERED")
-    if not (
-        os.path.exists(marker)
-        and os.path.exists(ordered_marker)
-        and os.path.getmtime(marker) > os.path.getmtime(src)
-    ):
-        (
-            load_table(spark, sf_dir, "events")
-            .repartitionByRange(32, "ts")
-            .sortWithinPartitions("ts")
-            .write.mode("overwrite")
-            .parquet(stage)
-        )
-        import time as _time
-
-        base = _time.time()
-        # 1ms spacing: FileStreamSource orders by ms-precision mtime, so
-        # this still fixes replay order while keeping every stamp within
-        # ~50ms of wall-clock (1s spacing put parts up to 32s in the
-        # future, and the old marker at +40s masked any source
-        # regenerated inside that window as already-staged).
-        parts = sorted(f for f in os.listdir(stage) if f.startswith("part-"))
-        spacing = 0.001
-        while True:
-            # Stamp BACKWARDS from `base` (now): part i gets
-            # base - (n_parts - i)*spacing, so every stamp is in the
-            # PAST at any spacing. Stamping forwards would put parts
-            # (and the marker) up to n_parts*spacing in the future —
-            # at the 1 s escalation that is ~30 s of staleness mask, the
-            # exact source-regenerated-inside-the-window bug the 1 ms
-            # spacing originally fixed.
-            for i, p in enumerate(parts):
-                t = base - (len(parts) - i) * spacing
-                os.utime(os.path.join(stage, p), (t, t))
-            # Read back and verify the stamps are STRICTLY increasing:
-            # the ms spacing assumes the staging filesystem preserves
-            # sub-second mtime precision — on a coarse-granularity fs
-            # (1s mtimes) adjacent stamps collapse to equal values and
-            # replay order goes nondeterministic again, the exact
-            # failure the spacing exists to prevent. Escalate the
-            # spacing 1000× (to 1s, which any POSIX fs preserves)
-            # rather than silently reordering.
-            stamps = [os.path.getmtime(os.path.join(stage, p)) for p in parts]
-            if all(a < b for a, b in zip(stamps, stamps[1:])):
-                break
-            if spacing >= 1.0:
-                raise OSError(
-                    f"staging fs collapsed part mtimes even at {spacing}s "
-                    f"spacing; FileStreamSource replay order would be "
-                    f"nondeterministic under {stage}"
-                )
-            spacing *= 1000
-        with open(ordered_marker, "w"):
-            pass
-        # staleness invariant: marker mtime > every part mtime; `base`
-        # itself is strictly greater than every backdated part stamp
-        # and is not in the future.
-        os.utime(marker, (base, base))
-    return stage
+    time, so an ordered write (range-partitioned on ``ts``, mtimes
+    ascending in range order) makes a multi-batch replay see events in
+    event-time order — zero cross-batch lateness, so
+    ``maxFilesPerTrigger`` replays are output-identical to the
+    single-batch drain while the advancing watermark evicts join/agg
+    state between micro-batches. Without the ordering, the watermark
+    could race ahead of later files and (correctly, per streaming
+    semantics) drop their rows."""
+    write_ordered(load_table(spark, sf_dir, "events"), "ts", path, 32)
 
 
 def _staged_trigger_files(stage: str) -> int | None:
@@ -1192,8 +1121,9 @@ def q_layout_zorder_locality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stage_events_zordered(spark: SparkSession, sf_dir: str) -> str:
-    """Stage events as a Z-ORDERED parquet layout on (user_id,
+@staged("events_zordered", "events")
+def _stage_events_zordered(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """Events as a Z-ORDERED parquet layout on (user_id,
     minute_of_day) once per events version (operators/layout.
     write_zordered: min/max bucketization into the 11-bit budget, one
     range exchange, sorted files). Every staged file's footer then
@@ -1201,18 +1131,11 @@ def _stage_events_zordered(spark: SparkSession, sf_dir: str) -> str:
     before any compute — the read-side payoff the layout exists for,
     here under a registered query instead of only a test pin."""
     from nyc_opendata_etl_spark.operators.layout import write_zordered
-    from nyc_opendata_etl_spark.sources.staging import is_stale, stage_dir
 
-    path = stage_dir(sf_dir, "events_zordered")
-    if is_stale(path, sf_dir, "events"):
-        ev = load_table(spark, sf_dir, "events").withColumn(
-            "minute_of_day",
-            (F.hour("ts") * 60 + F.minute("ts")).cast("long"),
-        )
-        write_zordered(
-            ev, ["user_id", "minute_of_day"], path, bits=11, num_files=16
-        )
-    return path
+    ev = load_table(spark, sf_dir, "events").withColumn(
+        "minute_of_day", (F.hour("ts") * 60 + F.minute("ts")).cast("long")
+    )
+    write_zordered(ev, ["user_id", "minute_of_day"], path, bits=11, num_files=16)
 
 
 @register(

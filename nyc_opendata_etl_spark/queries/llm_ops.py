@@ -14,6 +14,7 @@ from nyc_opendata_etl_spark.functions.hashing import md5_long, md5_long_oracle_s
 from nyc_opendata_etl_spark.operators import dedup, similarity, text
 from nyc_opendata_etl_spark.queries import register
 from nyc_opendata_etl_spark.queries._sql import PY_WS_RE2
+from nyc_opendata_etl_spark.sources.staging import staged
 from nyc_opendata_etl_spark.sources.tables import load_table
 
 # canonical text form used by dedup ops, as DuckDB SQL
@@ -25,132 +26,80 @@ _CANON = (
 )
 
 
-def _stage_text_index(spark: SparkSession, sf_dir: str) -> str:
-    """Build the documents posting-list index once per corpus version
-    (sources/staging mtime guard); retrieval queries probe it instead of
-    tokenizing the corpus per execution. stats/ is written last, so its
-    marker proves the whole build completed."""
-    from nyc_opendata_etl_spark.sources.staging import is_stale, stage_dir
-
-    path = stage_dir(sf_dir, "text_index")
-    if is_stale(path, sf_dir, "documents", marker="stats/_SUCCESS"):
-        docs = load_table(spark, sf_dir, "documents")
-        text.build_text_index(docs, path)
-    return path
+@staged("text_index", "documents")
+def _stage_text_index(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The documents posting-list index, built once per corpus version;
+    retrieval queries probe it instead of tokenizing the corpus per
+    execution."""
+    text.build_text_index(load_table(spark, sf_dir, "documents"), path)
 
 
-def _stage_text_index_incremental(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the posting-list index by INCREMENTAL construction: build
-    from the even-doc_id half of the corpus, then update_text_index the
-    odd half — exercising the append/merge maintenance path end to end.
+@staged("text_index_incr", "documents")
+def _stage_text_index_incremental(
+    spark: SparkSession, sf_dir: str, path: str
+) -> None:
+    """The posting-list index by INCREMENTAL construction: build from
+    the even-doc_id half of the corpus, then update_text_index the odd
+    half — exercising the append/merge maintenance path end to end.
     A probe over this index must equal one over a from-scratch build
     (same corpus), which the search_bm25_incremental oracle verifies
     against the raw documents."""
-    from nyc_opendata_etl_spark.sources.staging import is_stale, stage_dir
-
-    path = stage_dir(sf_dir, "text_index_incr")
-    if is_stale(path, sf_dir, "documents", marker="_INCR_DONE"):
-        import os
-
-        docs = load_table(spark, sf_dir, "documents")
-        text.build_text_index(docs.filter(F.col("doc_id") % 2 == 0), path)
-        text.update_text_index(
-            spark, docs.filter(F.col("doc_id") % 2 == 1), path
-        )
-        with open(os.path.join(path, "_INCR_DONE"), "w") as fh:
-            fh.write("")  # both phases completed
-    return path
+    docs = load_table(spark, sf_dir, "documents")
+    text.build_text_index(docs.filter(F.col("doc_id") % 2 == 0), path)
+    text.update_text_index(spark, docs.filter(F.col("doc_id") % 2 == 1), path)
 
 
-def _stage_fingerprint_index(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the historical corpus's content-fingerprint index (even
-    doc_ids — the corpus half of the dedup_incremental scenario) once
-    per corpus version. Built incrementally to exercise the append
-    maintenance path: base build from doc_id % 4 == 0, then
-    update_fingerprint_index appends doc_id % 4 == 2 — together exactly
-    the even half. _INCR_DONE is written last, proving both phases
-    completed."""
-    from nyc_opendata_etl_spark.sources.staging import is_stale, stage_dir
-
-    path = stage_dir(sf_dir, "fingerprint_index")
-    if is_stale(path, sf_dir, "documents", marker="_INCR_DONE"):
-        import os
-
-        docs = load_table(spark, sf_dir, "documents")
-        dedup.build_fingerprint_index(docs.filter(F.col("doc_id") % 4 == 0), path)
-        dedup.update_fingerprint_index(docs.filter(F.col("doc_id") % 4 == 2), path)
-        with open(os.path.join(path, "_INCR_DONE"), "w") as fh:
-            fh.write("")  # both phases completed
-    return path
+@staged("fingerprint_index", "documents")
+def _stage_fingerprint_index(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The historical corpus's content-fingerprint index (even doc_ids
+    — the corpus half of the dedup_incremental scenario). Built
+    incrementally to exercise the append maintenance path: base build
+    from doc_id % 4 == 0, then update_fingerprint_index appends
+    doc_id % 4 == 2 — together exactly the even half."""
+    docs = load_table(spark, sf_dir, "documents")
+    dedup.build_fingerprint_index(docs.filter(F.col("doc_id") % 4 == 0), path)
+    dedup.update_fingerprint_index(docs.filter(F.col("doc_id") % 4 == 2), path)
 
 
-def _stage_lsh_index(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the historical corpus's LSH band-bucket index (even
-    doc_ids — the corpus half of the incremental near-dup scenario)
-    once per corpus version: the near-dup twin of
-    _stage_fingerprint_index, and like it built INCREMENTALLY to
-    exercise the append maintenance path: base build from
-    doc_id % 4 == 0 (params/ written last — the r12 self-describing
-    (num_hashes, bands) record), then update_lsh_bucket_index appends
-    doc_id % 4 == 2 — together exactly the even half, so the
-    dedup_incremental_minhash oracle (which recomputes the even-corpus
-    side from raw documents) doubles as the append-equivalence proof.
-    _INCR_DONE is written last, proving both phases completed."""
-    from nyc_opendata_etl_spark.sources.staging import is_stale, stage_dir
-
-    path = stage_dir(sf_dir, "lsh_bucket_index")
-    if is_stale(path, sf_dir, "documents", marker="_INCR_DONE"):
-        import os
-
-        docs = load_table(spark, sf_dir, "documents")
-        dedup.build_lsh_bucket_index(docs.filter(F.col("doc_id") % 4 == 0), path)
-        dedup.update_lsh_bucket_index(
-            docs.filter(F.col("doc_id") % 4 == 2), path
-        )
-        with open(os.path.join(path, "_INCR_DONE"), "w") as fh:
-            fh.write("")  # both phases completed
-    return path
+@staged("lsh_bucket_index", "documents")
+def _stage_lsh_index(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The historical corpus's LSH band-bucket index (even doc_ids —
+    the corpus half of the incremental near-dup scenario): the near-dup
+    twin of _stage_fingerprint_index, and like it built INCREMENTALLY:
+    base build from doc_id % 4 == 0 (params/ written last — the r12
+    self-describing (num_hashes, bands) record), then
+    update_lsh_bucket_index appends doc_id % 4 == 2 — together exactly
+    the even half, so the dedup_incremental_minhash oracle (which
+    recomputes the even-corpus side from raw documents) doubles as the
+    append-equivalence proof."""
+    docs = load_table(spark, sf_dir, "documents")
+    dedup.build_lsh_bucket_index(docs.filter(F.col("doc_id") % 4 == 0), path)
+    dedup.update_lsh_bucket_index(docs.filter(F.col("doc_id") % 4 == 2), path)
 
 
-def _stage_ivfpq_index(spark: SparkSession, sf_dir: str) -> str:
-    """Build the IVF-PQ index once per embeddings version; the ANN query
-    probes the persisted cells. params/ is written last (r11 layout —
-    the self-describing parameter record) — its marker proves the
-    whole build completed, and pre-params stage dirs rebuild once."""
-    from nyc_opendata_etl_spark.sources.staging import is_stale, stage_dir
-
-    path = stage_dir(sf_dir, "ivfpq_index")
-    if is_stale(path, sf_dir, "embeddings", marker="params/_SUCCESS"):
-        emb = load_table(spark, sf_dir, "embeddings")
-        similarity.build_ivfpq_index(emb, path)
-    return path
+@staged("ivfpq_index", "embeddings")
+def _stage_ivfpq_index(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The IVF-PQ index, built once per embeddings version; the ANN
+    query probes the persisted cells."""
+    similarity.build_ivfpq_index(load_table(spark, sf_dir, "embeddings"), path)
 
 
-def _stage_ivfpq_index_incremental(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the IVF-PQ index by INCREMENTAL construction: build from
-    the even-vec_id half of the embeddings, then update_ivfpq_index the
-    odd half — the append/route/encode maintenance path end to end,
+@staged("ivfpq_index_incr", "embeddings")
+def _stage_ivfpq_index_incremental(
+    spark: SparkSession, sf_dir: str, path: str
+) -> None:
+    """The IVF-PQ index by INCREMENTAL construction: build from the
+    even-vec_id half of the embeddings, then update_ivfpq_index the odd
+    half — the append/route/encode maintenance path end to end,
     mirroring _stage_text_index_incremental. The quantizers (centroids,
     codebook) come from the BUILD half only (vec_id < 16 among evens ⇒
     8 cells, 8 codes) and the update reuses them without retraining —
     exactly the FAISS add() contract — so the staged index equals a
     one-shot assignment of the FULL corpus against the build-half
-    quantizers, which is what the oracle replays. _INCR_DONE is written
-    last, proving both phases completed."""
-    from nyc_opendata_etl_spark.sources.staging import is_stale, stage_dir
-
-    path = stage_dir(sf_dir, "ivfpq_index_incr")
-    if is_stale(path, sf_dir, "embeddings", marker="_INCR_DONE"):
-        import os
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        similarity.build_ivfpq_index(emb.filter(F.col("vec_id") % 2 == 0), path)
-        similarity.update_ivfpq_index(
-            emb.filter(F.col("vec_id") % 2 == 1), path
-        )
-        with open(os.path.join(path, "_INCR_DONE"), "w") as fh:
-            fh.write("")  # both phases completed
-    return path
+    quantizers, which is what the oracle replays."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    similarity.build_ivfpq_index(emb.filter(F.col("vec_id") % 2 == 0), path)
+    similarity.update_ivfpq_index(emb.filter(F.col("vec_id") % 2 == 1), path)
 
 
 @register(
@@ -923,8 +872,9 @@ def q_dedup_clusters_logstar(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stage_dup_clusters(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the near-dup CLUSTER MAP once per corpus version — the
+@staged("dup_clusters", "documents")
+def _stage_dup_clusters(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The near-dup CLUSTER MAP, staged once per corpus version — the
     write-time-staging law applied to clustering (VERDICT r13 item 4):
     a real pipeline computes near-dup clusters ONCE (the dedup pass)
     and every downstream consumer probes the artifact; recomputing the
@@ -935,15 +885,8 @@ def _stage_dup_clusters(spark: SparkSession, sf_dir: str) -> str:
     duplicate_clusters_collapsed output verbatim — (doc_id,
     cluster_id) for every doc in a dup relation — so any staged-vs-
     in-query difference would fail the consumer's unchanged oracle."""
-    from nyc_opendata_etl_spark.sources.staging import is_stale, stage_dir
-
-    path = stage_dir(sf_dir, "dup_clusters")
-    if is_stale(path, sf_dir, "documents"):
-        docs = load_table(spark, sf_dir, "documents", spread_input=True)
-        dedup.duplicate_clusters_collapsed(docs, threshold=0.8).write.mode(
-            "overwrite"
-        ).parquet(path)
-    return path
+    docs = load_table(spark, sf_dir, "documents", spread_input=True)
+    dedup.duplicate_clusters_collapsed(docs, threshold=0.8).write.parquet(path)
 
 
 @register(
@@ -2950,7 +2893,7 @@ def q_similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ composed ANN as a STAGED-INDEX probe
     (operators/similarity.ivfpq_topk_indexed over build_ivfpq_index):
     the corpus-wide IVF assignment and PQ encoding are write-time work,
-    built once per embeddings version (sources/staging mtime guard) and
+    built once per embeddings version (sources/staging) and
     persisted with codes partitioned by cell — so the query path reads
     only its 2-of-16 probed cells via partition pruning, scores them
     from a 128-row broadcast ADC LUT, and never touches the rest of the
@@ -3115,7 +3058,7 @@ def q_search_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 top-20 for the query {hash, join, vector} as a STAGED
     posting-list probe (operators/text.bm25_topk_indexed over
     build_text_index): the corpus tokenize/explode is write-time work,
-    built once per documents version (sources/staging mtime guard) into
+    built once per documents version (sources/staging) into
     a term-sorted postings layout — so the query path reads only the
     three query terms' postings (pushed predicate + footer-stats file
     pruning), broadcasts the 3-row vocabulary and 1-row corpus stats,
@@ -3221,27 +3164,28 @@ def _split_passage_key(hits: DataFrame) -> DataFrame:
     )
 
 
-def _stage_chunk_text_index(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the PASSAGE-level posting index once per corpus version:
+@staged("chunk_text_index", "documents")
+def _stage_chunk_text_index(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The PASSAGE-level posting index, staged once per corpus version:
     chunk every document into 64-token windows (stride 56 — the
     corpus_chunk_docs geometry) and build the standard text index over
     the chunks under the composite doc·2^20+chunk key. build_text_index
     and the probes are key-agnostic, so the whole retrieval stack
     (pruned postings, broadcast vocab/stats, top-k) works at passage
     granularity unchanged — the RAG-shaped deployment."""
-    from nyc_opendata_etl_spark.operators import curation
-    from nyc_opendata_etl_spark.sources.staging import is_stale, stage_dir
+    docs = load_table(spark, sf_dir, "documents")
+    text.build_text_index(_passages(docs), path)
 
-    path = stage_dir(sf_dir, "chunk_text_index")
-    if is_stale(path, sf_dir, "documents", marker="stats/_SUCCESS"):
-        docs = load_table(spark, sf_dir, "documents")
-        chunks = curation.chunk_documents(docs, chunk_tokens=64, overlap=8)
-        keyed = chunks.select(
-            _passage_key().alias("doc_id"),
-            F.col("chunk_text").alias("text"),
-        )
-        text.build_text_index(keyed, path)
-    return path
+
+def _passages(docs: DataFrame) -> DataFrame:
+    """``docs`` as 64-token passages (stride 56) keyed doc·2^20+chunk,
+    in build_text_index's (doc_id, text) shape."""
+    from nyc_opendata_etl_spark.operators import curation
+
+    chunks = curation.chunk_documents(docs, chunk_tokens=64, overlap=8)
+    return chunks.select(
+        _passage_key().alias("doc_id"), F.col("chunk_text").alias("text")
+    )
 
 
 @register(
@@ -3331,37 +3275,21 @@ def q_search_bm25_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _split_passage_key(hits)
 
 
-def _stage_chunk_text_index_incremental(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the passage index by INCREMENTAL construction: build from
+@staged("chunk_text_index_incr", "documents")
+def _stage_chunk_text_index_incremental(
+    spark: SparkSession, sf_dir: str, path: str
+) -> None:
+    """The passage index by INCREMENTAL construction: build from
     the even-doc half's chunks, then update_text_index the odd half's —
     the hourly-RAG-ingest shape (new documents arrive, ONLY their
     chunks are tokenized and appended; the indexed corpus is never
     re-read). Chunk keys inherit doc-id disjointness (the composite key
-    is doc-major), satisfying update_text_index's append contract.
-    _INCR_DONE proves both phases completed."""
-    from nyc_opendata_etl_spark.operators import curation
-    from nyc_opendata_etl_spark.sources.staging import is_stale, stage_dir
-
-    path = stage_dir(sf_dir, "chunk_text_index_incr")
-    if is_stale(path, sf_dir, "documents", marker="_INCR_DONE"):
-        import os
-
-        docs = load_table(spark, sf_dir, "documents")
-
-        def keyed(half: DataFrame) -> DataFrame:
-            ch = curation.chunk_documents(half, chunk_tokens=64, overlap=8)
-            return ch.select(
-                _passage_key().alias("doc_id"),
-                F.col("chunk_text").alias("text"),
-            )
-
-        text.build_text_index(keyed(docs.filter(F.col("doc_id") % 2 == 0)), path)
-        text.update_text_index(
-            spark, keyed(docs.filter(F.col("doc_id") % 2 == 1)), path
-        )
-        with open(os.path.join(path, "_INCR_DONE"), "w") as fh:
-            fh.write("")  # both phases completed
-    return path
+    is doc-major), satisfying update_text_index's append contract."""
+    docs = load_table(spark, sf_dir, "documents")
+    text.build_text_index(_passages(docs.filter(F.col("doc_id") % 2 == 0)), path)
+    text.update_text_index(
+        spark, _passages(docs.filter(F.col("doc_id") % 2 == 1)), path
+    )
 
 
 @register(
@@ -3447,30 +3375,22 @@ def q_search_bm25_passages_incremental(
     return _split_passage_key(hits)
 
 
-def _stage_text_index_compacted(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the posting-list index through the full LIFECYCLE: build
+@staged("text_index_del", "documents")
+def _stage_text_index_compacted(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The posting-list index staged through the full LIFECYCLE: build
     over the whole corpus, DELETE every doc_id % 5 == 0 (the takedown
     batch), compact — the maintenance pass that makes deletions
     visible and re-derives vocab/stats exactly from the survivors
-    (operators/index_maintenance). _COMPACT_DONE is written last,
-    proving build + delete + compact all completed."""
+    (operators/index_maintenance)."""
     from nyc_opendata_etl_spark.operators import index_maintenance
-    from nyc_opendata_etl_spark.sources.staging import is_stale, stage_dir
 
-    path = stage_dir(sf_dir, "text_index_del")
-    if is_stale(path, sf_dir, "documents", marker="_COMPACT_DONE"):
-        import os
-
-        docs = load_table(spark, sf_dir, "documents")
-        text.build_text_index(docs, path)
-        index_maintenance.compact_text_index(
-            spark,
-            path,
-            delete_ids=docs.filter(F.col("doc_id") % 5 == 0).select("doc_id"),
-        )
-        with open(os.path.join(path, "_COMPACT_DONE"), "w") as fh:
-            fh.write("")  # build + delete + compact completed
-    return path
+    docs = load_table(spark, sf_dir, "documents")
+    text.build_text_index(docs, path)
+    index_maintenance.compact_text_index(
+        spark,
+        path,
+        delete_ids=docs.filter(F.col("doc_id") % 5 == 0).select("doc_id"),
+    )
 
 
 @register(

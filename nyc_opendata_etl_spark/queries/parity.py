@@ -35,6 +35,7 @@ from nyc_opendata_etl_spark.operators.keys import assign_keys
 from nyc_opendata_etl_spark.operators.star import star_revenue
 from nyc_opendata_etl_spark.queries import register
 from nyc_opendata_etl_spark.queries._sql import money_sum, norm, surrogate
+from nyc_opendata_etl_spark.sources.staging import staged
 from nyc_opendata_etl_spark.sources.tables import load_table
 
 # --------------------------------------------------------------------------
@@ -456,34 +457,23 @@ def q_project_defensive(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def _stage_documents(spark: SparkSession, sf_dir: str, fmt: str) -> str:
-    """Stage documents.parquet as CSV/JSONL once per source mtime (the
-    raw-file-drop shape the format readers exist for)."""
-    import hashlib
-    import os
+@staged("documents_csv", "documents")
+def _stage_documents_csv(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """documents.parquet as a header-CSV file drop (the raw-file-drop
+    shape the format readers exist for)."""
+    load_table(spark, sf_dir, "documents").write.option("header", True).csv(path)
 
-    from nyc_opendata_etl_spark.sources.staging import stage_root
 
-    key = hashlib.md5(sf_dir.rstrip("/").encode()).hexdigest()[:12]
-    stage = os.path.join(
-        stage_root(),
-        "spark_graft_fmt_stage",
-        f"{os.path.basename(sf_dir.rstrip('/'))}_{key}.{fmt}",
-    )
-    src = os.path.join(sf_dir, "documents.parquet")
-    marker = os.path.join(stage, "_SUCCESS")
-    if not (
-        os.path.exists(marker)
-        and os.path.getmtime(marker) > os.path.getmtime(src)
-    ):
-        docs = load_table(spark, sf_dir, "documents")
-        if fmt == "csv":
-            docs.write.mode("overwrite").option("header", True).csv(stage)
-        elif fmt == "orc":
-            docs.write.mode("overwrite").orc(stage)
-        else:
-            docs.write.mode("overwrite").json(stage)
-    return stage
+@staged("documents_jsonl", "documents")
+def _stage_documents_jsonl(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """documents.parquet as a JSON-lines file drop."""
+    load_table(spark, sf_dir, "documents").write.json(path)
+
+
+@staged("documents_orc", "documents")
+def _stage_documents_orc(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """documents.parquet as an ORC file drop."""
+    load_table(spark, sf_dir, "documents").write.orc(path)
 
 
 _DOCS_AGG_ORACLE = """
@@ -505,7 +495,7 @@ def q_ingest_csv_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     for every row, not just a sampled few."""
     from nyc_opendata_etl_spark.sources.formats import read_csv
 
-    stage = _stage_documents(spark, sf_dir, "csv")
+    stage = _stage_documents_csv(spark, sf_dir)
     docs = read_csv(
         spark,
         stage,
@@ -528,7 +518,7 @@ def q_ingest_jsonl_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     types and values for the whole table."""
     from nyc_opendata_etl_spark.sources.formats import read_jsonl
 
-    stage = _stage_documents(spark, sf_dir, "jsonl")
+    stage = _stage_documents_jsonl(spark, sf_dir)
     docs = read_jsonl(spark, stage)
     return docs.groupBy("lang", "source").agg(
         F.count("*").alias("n_docs"),
@@ -548,7 +538,7 @@ def q_ingest_orc_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     for every row and type."""
     from nyc_opendata_etl_spark.sources.formats import read_orc
 
-    stage = _stage_documents(spark, sf_dir, "orc")
+    stage = _stage_documents_orc(spark, sf_dir)
     docs = read_orc(spark, stage)
     return docs.groupBy("lang", "source").agg(
         F.count("*").alias("n_docs"),

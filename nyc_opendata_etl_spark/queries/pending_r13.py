@@ -23,6 +23,12 @@ from nyc_opendata_etl_spark.functions.hashing import md5_long_oracle_sql
 from nyc_opendata_etl_spark.operators import dedup, multimodal
 from nyc_opendata_etl_spark.queries import register
 from nyc_opendata_etl_spark.queries.llm_ops import _CANON
+from nyc_opendata_etl_spark.sources.staging import (
+    fresh_run_dir,
+    stamp_in_order,
+    staged,
+    write_ordered,
+)
 from nyc_opendata_etl_spark.sources.tables import load_table
 
 PENDING: dict[str, tuple] = {}
@@ -40,70 +46,17 @@ def _pending(name: str, oracle: str):
     return deco
 
 
-def _fresh_run_dir(prefix: str) -> str:
-    """Per-invocation scratch dir for a streaming run (sink + index +
-    checkpoint), with two-sided leak control (ADVICE r12 low): dirs
-    from THIS process are rmtree'd at interpreter exit (the returned
-    DataFrame is lazy, so removal must outlive the caller — atexit is
-    the earliest safe point), and orphans from crashed/killed earlier
-    runs are reaped on the next invocation. Liveness, not age, decides
-    what is an orphan (ADVICE r13: the old 1-hour mtime cutoff could
-    delete a LIVE long run's sink/checkpoint mid-run — a large-sf
-    bench or a stuck stream legitimately exceeds an hour): the owning
-    pid is embedded in the dir name and probed with ``os.kill(pid,
-    0)``; only dead owners are reaped. Legacy dirs without a pid tag
-    fall back to a conservative 24 h mtime cutoff."""
-    import atexit
-    import glob
-    import os
-    import re
-    import shutil
-    import tempfile
-    import time
-
-    for old in glob.glob(os.path.join(tempfile.gettempdir(), prefix + "*")):
-        m = re.match(re.escape(prefix) + r"p(\d+)_", os.path.basename(old))
-        try:
-            if m:
-                pid = int(m.group(1))
-                try:
-                    os.kill(pid, 0)
-                    continue  # owner alive — its run dir is not ours to reap
-                except ProcessLookupError:
-                    shutil.rmtree(old, ignore_errors=True)
-                except PermissionError:
-                    continue  # pid exists under another user — treat as live
-            elif os.path.getmtime(old) < time.time() - 86400:
-                shutil.rmtree(old, ignore_errors=True)
-        except OSError:
-            pass
-    run = tempfile.mkdtemp(prefix=f"{prefix}p{os.getpid()}_")
-    atexit.register(shutil.rmtree, run, ignore_errors=True)
-    return run
-
-
-def _stage_fingerprint_index_rc(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the REFCOUNTED fingerprint delta log once per corpus
-    version, exercising every maintenance direction: base build from
-    the even half, an append batch (doc_id % 4 == 1), then a DELETE of
+@staged("fingerprint_index_rc", "documents")
+def _stage_fingerprint_index_rc(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The REFCOUNTED fingerprint delta log, staged once per corpus
+    version through every maintenance direction: base build from the
+    even half, an append batch (doc_id % 4 == 1), then a DELETE of
     doc_id % 8 == 0 (a quarter of the evens — each withdrawn doc was
-    present exactly once, per the delete contract). _RC_DONE is written
-    last, proving all three phases completed."""
-    import os
-
-    from nyc_opendata_etl_spark.sources.staging import is_stale, stage_dir
-
-    path = stage_dir(sf_dir, "fingerprint_index_rc")
-    if is_stale(path, sf_dir, "documents", marker="_RC_DONE"):
-        docs = load_table(spark, sf_dir, "documents")
-        dedup.build_fingerprint_index_rc(docs.filter(F.col("doc_id") % 2 == 0), path)
-        dedup.update_fingerprint_index_rc(docs.filter(F.col("doc_id") % 4 == 1), path)
-        dedup.delete_from_fingerprint_index_rc(
-            docs.filter(F.col("doc_id") % 8 == 0), path
-        )
-        with open(os.path.join(path, "_RC_DONE"), "w") as fh:
-            fh.write("")
-    return path
+    present exactly once, per the delete contract)."""
+    docs = load_table(spark, sf_dir, "documents")
+    dedup.build_fingerprint_index_rc(docs.filter(F.col("doc_id") % 2 == 0), path)
+    dedup.update_fingerprint_index_rc(docs.filter(F.col("doc_id") % 4 == 1), path)
+    dedup.delete_from_fingerprint_index_rc(docs.filter(F.col("doc_id") % 8 == 0), path)
 
 
 @_pending(
@@ -147,41 +100,15 @@ def q_dedup_incremental_rc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.incremental_new_docs_rc(batch, spark.read.parquet(index_path))
 
 
-def _stage_docs_idordered(spark: SparkSession, sf_dir: str) -> str:
-    """Stage documents as 8 doc_id-range-ordered parquet files with
-    ascending mtimes (the _stage_events protocol: FileStreamSource
-    replays by ms-precision mtime; part numbering == range order under
-    repartitionByRange, and stamps go BACKWARDS from now so nothing
-    lands in the future and masks a source regeneration). Ascending id
-    ranges are what make the ingest contract SQL-expressible: the first
-    micro-batch containing a canon holds that canon's smallest ids, so
-    the accepted doc per canon is the GLOBAL min id."""
-    import os
-    import time
-
-    from nyc_opendata_etl_spark.sources.staging import is_stale, stage_dir
-
-    path = stage_dir(sf_dir, "docs_idordered")
-    if is_stale(path, sf_dir, "documents"):
-        (
-            load_table(spark, sf_dir, "documents")
-            .select("doc_id", "text")
-            .repartitionByRange(8, "doc_id")
-            .sortWithinPartitions("doc_id")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-        parts = sorted(f for f in os.listdir(path) if f.startswith("part-"))
-        base = time.time()
-        for i, p in enumerate(parts):
-            # ≥1 s apart: 1 ms sat at the precision floor of both
-            # os.utime round-tripping and FileStreamSource's
-            # ms-granularity mtimes — a coarser filesystem would
-            # collapse the stamps to ties and make batch order (and
-            # the min-id oracle) flaky (ADVICE r12 low).
-            t = base - (len(parts) - i) * 1.0
-            os.utime(os.path.join(path, p), (t, t))
-    return path
+@staged("docs_idordered", "documents")
+def _stage_docs_idordered(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """Documents as 8 doc_id-range-ordered parquet files replayed in id
+    order (sources/staging.write_ordered). Ascending id ranges are what
+    make the ingest contract SQL-expressible: the first micro-batch
+    containing a canon holds that canon's smallest ids, so the
+    accepted doc per canon is the GLOBAL min id."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    write_ordered(docs, "doc_id", path, 8)
 
 
 @_pending(
@@ -214,7 +141,7 @@ def q_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nyc_opendata_etl_spark.streaming.ingest import stream_dedup_ingest
 
     src = _stage_docs_idordered(spark, sf_dir)
-    run = _fresh_run_dir("spark_graft_ingest_run_")
+    run = fresh_run_dir("spark_graft_ingest_run_")
     stream = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", "2")
@@ -230,63 +157,51 @@ def q_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{run}/out").select("doc_id")
 
 
-def _stage_cdc_batches(spark: SparkSession, sf_dir: str) -> str:
-    """Stage two CDC update batches against the customer dim as plain
-    top-level parquet FILES with ascending mtimes (file-source batch
-    order). KEY-DISJOINT by construction — batch 0 changes custkey%4==0,
-    batch 1 no-ops %4==1 and inserts shifted %4==2 — which is what
-    makes the streaming result SQL-expressible: SCD2 merges over
-    key-disjoint update sets COMPOSE, so merge(merge(dim,b0),b1) ==
-    merge(dim, b0 ∪ b1), a single-merge oracle. Spark writes each batch
-    into a scratch subdir and the part file is renamed up (the file
-    source ignores nested directories)."""
+@staged("cdc_customer_batches", "customer")
+def _stage_cdc_batches(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """Two CDC update batches against the customer dim as plain
+    top-level parquet FILES replayed in batch order (sources/staging.
+    stamp_in_order). KEY-DISJOINT by construction — batch 0 changes
+    custkey%4==0, batch 1 no-ops %4==1 and inserts shifted %4==2 —
+    which is what makes the streaming result SQL-expressible: SCD2
+    merges over key-disjoint update sets COMPOSE, so
+    merge(merge(dim,b0),b1) == merge(dim, b0 ∪ b1), a single-merge
+    oracle. Spark writes each batch into a scratch subdir and the part
+    file is renamed up (the file source ignores nested directories)."""
     import os
     import shutil
-    import time
 
-    from nyc_opendata_etl_spark.sources.staging import is_stale, stage_dir
-
-    path = stage_dir(sf_dir, "cdc_customer_batches")
-    if is_stale(path, sf_dir, "customer"):
-        cust = load_table(spark, sf_dir, "customer")
-        eff = F.to_date(F.lit("2025-06-01"))
-        batches = [
-            cust.filter(F.col("c_custkey") % 4 == 0).select(
-                F.col("c_custkey").alias("k"),
-                F.concat(F.lit("V0_"), "c_mktsegment").alias("attr"),
-                eff.alias("eff_date"),
-            ),
-            cust.filter(F.col("c_custkey") % 4 == 1)
-            .select(
-                F.col("c_custkey").alias("k"),
-                F.col("c_mktsegment").alias("attr"),
+    cust = load_table(spark, sf_dir, "customer")
+    eff = F.to_date(F.lit("2025-06-01"))
+    batches = [
+        cust.filter(F.col("c_custkey") % 4 == 0).select(
+            F.col("c_custkey").alias("k"),
+            F.concat(F.lit("V0_"), "c_mktsegment").alias("attr"),
+            eff.alias("eff_date"),
+        ),
+        cust.filter(F.col("c_custkey") % 4 == 1)
+        .select(
+            F.col("c_custkey").alias("k"),
+            F.col("c_mktsegment").alias("attr"),
+            eff.alias("eff_date"),
+        )
+        .unionByName(
+            cust.filter(F.col("c_custkey") % 4 == 2).select(
+                (F.col("c_custkey") + 10_000_000).alias("k"),
+                F.lit("FRESH").alias("attr"),
                 eff.alias("eff_date"),
             )
-            .unionByName(
-                cust.filter(F.col("c_custkey") % 4 == 2).select(
-                    (F.col("c_custkey") + 10_000_000).alias("k"),
-                    F.lit("FRESH").alias("attr"),
-                    eff.alias("eff_date"),
-                )
-            ),
-        ]
-        os.makedirs(path, exist_ok=True)
-        base = time.time()
-        for i, b in enumerate(batches):
-            scratch = os.path.join(path, f"__scratch_{i}")
-            b.coalesce(1).write.mode("overwrite").parquet(scratch)
-            part = next(
-                f for f in os.listdir(scratch) if f.startswith("part-")
-            )
-            dst = os.path.join(path, f"b{i}.parquet")
-            os.replace(os.path.join(scratch, part), dst)
-            shutil.rmtree(scratch)
-            # ≥1 s spacing — see _stage_docs_idordered (ADVICE r12).
-            t = base - (len(batches) - i) * 1.0
-            os.utime(dst, (t, t))
-        with open(os.path.join(path, "_SUCCESS"), "w") as fh:
-            fh.write("")
-    return path
+        ),
+    ]
+    files = []
+    for i, b in enumerate(batches):
+        scratch = os.path.join(path, f"__scratch_{i}")
+        b.coalesce(1).write.parquet(scratch)
+        part = next(f for f in os.listdir(scratch) if f.startswith("part-"))
+        files.append(os.path.join(path, f"b{i}.parquet"))
+        os.replace(os.path.join(scratch, part), files[-1])
+        shutil.rmtree(scratch)
+    stamp_in_order(files)
 
 
 @_pending(
@@ -358,7 +273,7 @@ def q_stream_scd2_upserts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     src = _stage_cdc_batches(spark, sf_dir)
-    run = _fresh_run_dir("spark_graft_scd2_run_")
+    run = fresh_run_dir("spark_graft_scd2_run_")
     dim_path = f"{run}/dim"
     cur = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("k"),

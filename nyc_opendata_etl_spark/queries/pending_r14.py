@@ -20,10 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from nyc_opendata_etl_spark.queries import llm_ops  # registers search_bm25
 from nyc_opendata_etl_spark.queries import REGISTRY, register
-from nyc_opendata_etl_spark.queries.pending_r13 import (
-    _fresh_run_dir,
-    _stage_docs_idordered,
-)
+from nyc_opendata_etl_spark.queries.pending_r13 import _stage_docs_idordered
+from nyc_opendata_etl_spark.sources.staging import fresh_run_dir
 
 PENDING: dict[str, tuple] = {}
 
@@ -70,7 +68,7 @@ def q_stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     src = _stage_docs_idordered(spark, sf_dir)
-    run = _fresh_run_dir("spark_graft_iidx_run_")
+    run = fresh_run_dir("spark_graft_iidx_run_")
     stream = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", "2")

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from nyc_opendata_etl_spark.queries import REGISTRY, register
 from nyc_opendata_etl_spark.queries import llm_ops  # noqa: F401
+from nyc_opendata_etl_spark.sources.staging import fresh_run_dir, staged, write_ordered
 from nyc_opendata_etl_spark.sources.tables import load_table
 
 PENDING: dict[str, tuple] = {}
@@ -38,110 +39,65 @@ def _pending(name: str, oracle: str):
     return deco
 
 
-def _stage_dup_cluster_index_incr(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the incremental cluster-map artifact once per corpus
+@staged("dup_cluster_index_incr", "documents")
+def _stage_dup_cluster_index_incr(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The incremental cluster-map artifact, staged once per corpus
     version: base build from the even half, one maintenance batch
     (batch 0 — the build seeds batch −1) folding in the odd half
-    (operators/cluster_index.py). _INCR_DONE is written last, proving
-    both phases completed. The staging kind carries a ``2`` suffix:
-    the ADVICE-r14 crash-idempotence rework changed the artifact
-    LAYOUT (batch-partitioned logs + versioned cluster snapshots), so
-    pre-rework staged dirs must never satisfy the staleness check."""
-    import os
-
+    (operators/cluster_index.py)."""
     from nyc_opendata_etl_spark.operators import cluster_index as ci
-    from nyc_opendata_etl_spark.sources.staging import is_stale, stage_dir
 
-    path = stage_dir(sf_dir, "dup_cluster_index_incr2")
-    if is_stale(path, sf_dir, "documents", marker="_INCR_DONE"):
-        # ADVICE r15: a stale rebuild must start from an EMPTY artifact.
-        # build_dup_cluster_index only overwrites b=-1/v=-1 partitions,
-        # so a prior run's b>=0 logs / v>=0 snapshots would survive a
-        # corpus change or crashed drain and poison later updates.
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
-        docs = load_table(spark, sf_dir, "documents")
-        ci.build_dup_cluster_index(docs.filter(F.col("doc_id") % 2 == 0), path)
-        ci.update_dup_cluster_index(
-            spark, docs.filter(F.col("doc_id") % 2 == 1), path, batch_id=0
-        )
-        with open(os.path.join(path, "_INCR_DONE"), "w") as fh:
-            fh.write("")
-    return path
+    docs = load_table(spark, sf_dir, "documents")
+    ci.build_dup_cluster_index(docs.filter(F.col("doc_id") % 2 == 0), path)
+    ci.update_dup_cluster_index(
+        spark, docs.filter(F.col("doc_id") % 2 == 1), path, batch_id=0
+    )
 
 
-def _stage_emb_idordered(spark: SparkSession, sf_dir: str) -> str:
-    """Stage embeddings as 8 vec_id-range-ordered parquet files with
-    ascending ≥1 s-apart mtimes — the _stage_docs_idordered protocol
-    (FileStreamSource replays by ms-precision mtime; stamps go
-    backwards from now), applied to the embeddings table so the ANN
-    ingest stream drains in deterministic id-ordered micro-batches."""
-    import os
-    import time
-
-    from nyc_opendata_etl_spark.sources.staging import is_stale, stage_dir
-
-    path = stage_dir(sf_dir, "emb_idordered")
-    if is_stale(path, sf_dir, "embeddings"):
-        (
-            load_table(spark, sf_dir, "embeddings")
-            .select("vec_id", "embedding")
-            .repartitionByRange(8, "vec_id")
-            .sortWithinPartitions("vec_id")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-        parts = sorted(f for f in os.listdir(path) if f.startswith("part-"))
-        base = time.time()
-        for i, p in enumerate(parts):
-            t = base - (len(parts) - i) * 1.0
-            os.utime(os.path.join(path, p), (t, t))
-    return path
+@staged("emb_idordered", "embeddings")
+def _stage_emb_idordered(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """Embeddings as 8 vec_id-range-ordered parquet files replayed in id
+    order (sources/staging.write_ordered), so the ANN ingest stream
+    drains in deterministic id-ordered micro-batches."""
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    write_ordered(emb, "vec_id", path, 8)
 
 
-def _stage_ivfpq_stream(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the STREAMING-built IVF-PQ index once per corpus version:
+@staged("ivfpq_index_stream", "embeddings")
+def _stage_ivfpq_stream(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The STREAMING-built IVF-PQ index, staged once per corpus version:
     quantizers (centroids/codebook/params) come from a build over the
     even-vec_id half — the similarity_ivfpq_incremental geometry, so
     that query's oracle transfers verbatim — but the build's codes are
     DISCARDED and the FULL corpus arrives through the exactly-once
     streaming sink (4 AvailableNow micro-batches over 8 id-ordered
     files), each batch dynamic-overwriting its own (batch, cid)
-    partitions. _STREAM_DONE is written last, proving build + discard
-    + drain all completed."""
+    partitions."""
     import os
     import shutil
     import uuid
 
     from nyc_opendata_etl_spark.operators import similarity
-    from nyc_opendata_etl_spark.queries.pending_r13 import _fresh_run_dir
-    from nyc_opendata_etl_spark.sources.staging import is_stale, stage_dir
     from nyc_opendata_etl_spark.streaming.ann_ingest import stream_ivfpq_ingest
 
-    path = stage_dir(sf_dir, "ivfpq_index_stream")
-    if is_stale(path, sf_dir, "embeddings", marker="_STREAM_DONE"):
-        emb = load_table(spark, sf_dir, "embeddings")
-        similarity.build_ivfpq_index(emb.filter(F.col("vec_id") % 2 == 0), path)
-        # codes arrive via the stream under the (batch, cid) layout —
-        # the build's cid-only codes would break partition discovery
-        shutil.rmtree(os.path.join(path, "codes"), ignore_errors=True)
-        src = _stage_emb_idordered(spark, sf_dir)
-        run = _fresh_run_dir("spark_graft_annidx_run_")
-        stream = (
-            spark.readStream.schema("vec_id long, embedding array<float>")
-            .option("maxFilesPerTrigger", "2")
-            .parquet(src)
-        )
-        stream_ivfpq_ingest(
-            stream,
-            path,
-            query_name=f"annidx_{uuid.uuid4().hex[:8]}",
-            checkpoint_location=f"{run}/ckpt",
-        )
-        with open(os.path.join(path, "_STREAM_DONE"), "w") as fh:
-            fh.write("")
-    return path
+    emb = load_table(spark, sf_dir, "embeddings")
+    similarity.build_ivfpq_index(emb.filter(F.col("vec_id") % 2 == 0), path)
+    # codes arrive via the stream under the (batch, cid) layout — the
+    # build's cid-only codes would break partition discovery
+    shutil.rmtree(os.path.join(path, "codes"), ignore_errors=True)
+    src = _stage_emb_idordered(spark, sf_dir)
+    run = fresh_run_dir("spark_graft_annidx_run_")
+    stream = (
+        spark.readStream.schema("vec_id long, embedding array<float>")
+        .option("maxFilesPerTrigger", "2")
+        .parquet(src)
+    )
+    stream_ivfpq_ingest(
+        stream,
+        path,
+        query_name=f"annidx_{uuid.uuid4().hex[:8]}",
+        checkpoint_location=f"{run}/ckpt",
+    )
 
 
 @_pending(

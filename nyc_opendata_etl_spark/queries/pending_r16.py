@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nyc_opendata_etl_spark.queries import REGISTRY, llm_ops, register  # noqa: F401
+from nyc_opendata_etl_spark.sources.staging import fresh_run_dir, staged, write_ordered
 from nyc_opendata_etl_spark.sources.tables import load_table
 
 PENDING: dict[str, tuple] = {}
@@ -30,84 +31,50 @@ def _pending(name: str, oracle: str):
     return deco
 
 
-def _stage_docs_odd_idordered(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the ODD-doc_id half of documents as 8 id-range-ordered
-    parquet files with ascending ≥1 s-apart mtimes (the
-    _stage_docs_idordered protocol: FileStreamSource replays by
-    ms-precision mtime; stamps go backwards from now), so the cluster
-    ingest stream drains the maintenance half in deterministic
+@staged("docs_odd_idordered", "documents")
+def _stage_docs_odd_idordered(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The ODD-doc_id half of documents as 8 id-range-ordered parquet
+    files replayed in id order (sources/staging.write_ordered), so the
+    cluster ingest stream drains the maintenance half in deterministic
     id-ordered micro-batches whose ids are disjoint from the even-half
     build — the batch updater's new-ids-only contract."""
-    import os
-    import time
-
-    from nyc_opendata_etl_spark.sources.staging import is_stale, stage_dir
-
-    path = stage_dir(sf_dir, "docs_odd_idordered")
-    if is_stale(path, sf_dir, "documents"):
-        (
-            load_table(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 2 == 1)
-            .select("doc_id", "text")
-            .repartitionByRange(8, "doc_id")
-            .sortWithinPartitions("doc_id")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-        parts = sorted(f for f in os.listdir(path) if f.startswith("part-"))
-        base = time.time()
-        for i, p in enumerate(parts):
-            t = base - (len(parts) - i) * 1.0
-            os.utime(os.path.join(path, p), (t, t))
-    return path
+    docs = load_table(spark, sf_dir, "documents")
+    odd = docs.filter(F.col("doc_id") % 2 == 1).select("doc_id", "text")
+    write_ordered(odd, "doc_id", path, 8)
 
 
-def _stage_cluster_stream(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the STREAMING-maintained cluster map once per corpus
+@staged("dup_cluster_index_stream", "documents")
+def _stage_cluster_stream(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The STREAMING-maintained cluster map, staged once per corpus
     version: from-scratch build over the even half (batch −1), then
     the odd half arrives through the exactly-once streaming sink
     (4 AvailableNow micro-batches over 8 id-ordered files), each epoch
     folding O(batch) work into the artifact — the
     dedup_clusters_incremental geometry with the single maintenance
     batch replaced by a genuine Structured Streaming drain, so that
-    query's oracle transfers VERBATIM. _STREAM_DONE is written last,
-    proving build + drain both completed."""
-    import os
+    query's oracle transfers VERBATIM."""
     import uuid
 
     from nyc_opendata_etl_spark.operators import cluster_index as ci
-    from nyc_opendata_etl_spark.queries.pending_r13 import _fresh_run_dir
-    from nyc_opendata_etl_spark.sources.staging import is_stale, stage_dir
     from nyc_opendata_etl_spark.streaming.cluster_ingest import (
         stream_cluster_ingest,
     )
 
-    path = stage_dir(sf_dir, "dup_cluster_index_stream")
-    if is_stale(path, sf_dir, "documents", marker="_STREAM_DONE"):
-        # ADVICE r15: a stale rebuild must start from an EMPTY artifact
-        # (build only overwrites b=-1/v=-1; surviving b>=0 logs from a
-        # crashed drain or prior corpus would poison later updates).
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
-        docs = load_table(spark, sf_dir, "documents")
-        ci.build_dup_cluster_index(docs.filter(F.col("doc_id") % 2 == 0), path)
-        src = _stage_docs_odd_idordered(spark, sf_dir)
-        run = _fresh_run_dir("spark_graft_clidx_run_")
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", "2")
-            .parquet(src)
-        )
-        stream_cluster_ingest(
-            stream,
-            path,
-            query_name=f"clidx_{uuid.uuid4().hex[:8]}",
-            checkpoint_location=f"{run}/ckpt",
-        )
-        with open(os.path.join(path, "_STREAM_DONE"), "w") as fh:
-            fh.write("")
-    return path
+    docs = load_table(spark, sf_dir, "documents")
+    ci.build_dup_cluster_index(docs.filter(F.col("doc_id") % 2 == 0), path)
+    src = _stage_docs_odd_idordered(spark, sf_dir)
+    run = fresh_run_dir("spark_graft_clidx_run_")
+    stream = (
+        spark.readStream.schema("doc_id long, text string")
+        .option("maxFilesPerTrigger", "2")
+        .parquet(src)
+    )
+    stream_cluster_ingest(
+        stream,
+        path,
+        query_name=f"clidx_{uuid.uuid4().hex[:8]}",
+        checkpoint_location=f"{run}/ckpt",
+    )
 
 
 @_pending(
@@ -139,40 +106,31 @@ def q_stream_cluster_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ci.read_dup_clusters(spark, path)
 
 
-def _stage_ivfpq_index_deleted(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the DELETION lifecycle of the IVF-PQ index: incremental
+@staged("ivfpq_index_deleted", "embeddings")
+def _stage_ivfpq_index_deleted(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The DELETION lifecycle of the IVF-PQ index: incremental
     construction (build even half, append odd half — the
     similarity_ivfpq_incremental geometry, so that oracle transfers by
     derivation), then TAKEDOWN of every vec_id ≡ 3 (mod 7) via
     compact_ivfpq_index(delete_ids) — code rows dropped and the
     cell-partitioned layout rewritten, quantizers untouched (they
     survive deletion even of their own training vectors: vec_id 10 is
-    both a centroid source and deleted, deliberately). _DEL_DONE is
-    written last, proving build + append + delete-compact all
-    completed."""
-    import os
-
+    both a centroid source and deleted, deliberately)."""
     from nyc_opendata_etl_spark.operators import similarity
     from nyc_opendata_etl_spark.operators.index_maintenance import (
         compact_ivfpq_index,
     )
-    from nyc_opendata_etl_spark.sources.staging import is_stale, stage_dir
 
-    path = stage_dir(sf_dir, "ivfpq_index_deleted")
-    if is_stale(path, sf_dir, "embeddings", marker="_DEL_DONE"):
-        emb = load_table(spark, sf_dir, "embeddings")
-        similarity.build_ivfpq_index(emb.filter(F.col("vec_id") % 2 == 0), path)
-        similarity.update_ivfpq_index(emb.filter(F.col("vec_id") % 2 == 1), path)
-        compact_ivfpq_index(
-            spark,
-            path,
-            delete_ids=emb.filter(F.col("vec_id") % 7 == 3).select(
-                F.col("vec_id").alias("id")
-            ),
-        )
-        with open(os.path.join(path, "_DEL_DONE"), "w") as fh:
-            fh.write("")
-    return path
+    emb = load_table(spark, sf_dir, "embeddings")
+    similarity.build_ivfpq_index(emb.filter(F.col("vec_id") % 2 == 0), path)
+    similarity.update_ivfpq_index(emb.filter(F.col("vec_id") % 2 == 1), path)
+    compact_ivfpq_index(
+        spark,
+        path,
+        delete_ids=emb.filter(F.col("vec_id") % 7 == 3).select(
+            F.col("vec_id").alias("id")
+        ),
+    )
 
 
 def _ivfpq_after_delete_oracle() -> str:

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from nyc_opendata_etl_spark.functions.hashing import md5_long_oracle_sql
 from nyc_opendata_etl_spark.queries import REGISTRY, llm_ops  # noqa: F401
 from nyc_opendata_etl_spark.queries.llm_ops import _cos_sql
+from nyc_opendata_etl_spark.sources.staging import staged
 from nyc_opendata_etl_spark.sources.tables import load_table
 
 PENDING: dict[str, tuple] = {}
@@ -36,38 +37,25 @@ def _pending(name: str, oracle: str):
     return deco
 
 
-def _stage_ivfpq_index_retrained(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the RE-TRAIN lifecycle of the IVF-PQ index: incremental
+@staged("ivfpq_index_retrained", "embeddings")
+def _stage_ivfpq_index_retrained(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The RE-TRAIN lifecycle of the IVF-PQ index: incremental
     construction with deliberately DRIFTED quantizers (build the even
     half — its convention centroids are the 8 even vec_ids < 16 —
     then append the odd half against those stale cells), then heal via
     retrain_ivfpq_index over the CURRENT full corpus, which recomputes
     the convention quantizers (now all 16 vec_ids < 16), re-encodes
-    every vector, and atomically swaps the whole index directory.
-    _RETRAIN_DONE is written last (and necessarily AFTER the swap — a
-    marker written pre-swap would be discarded with the old
-    directory), proving build + append + retrain all completed."""
-    import os
-    import shutil
-
+    every vector, and atomically swaps the whole index directory (the
+    staging marker lands after the swap, in the new directory)."""
     from nyc_opendata_etl_spark.operators import similarity
     from nyc_opendata_etl_spark.operators.index_maintenance import (
         retrain_ivfpq_index,
     )
-    from nyc_opendata_etl_spark.sources.staging import is_stale, stage_dir
 
-    path = stage_dir(sf_dir, "ivfpq_index_retrained")
-    if is_stale(path, sf_dir, "embeddings", marker="_RETRAIN_DONE"):
-        # stale rebuild starts from an empty artifact (ADVICE r15
-        # discipline — a crashed prior attempt must not survive)
-        shutil.rmtree(path, ignore_errors=True)
-        emb = load_table(spark, sf_dir, "embeddings")
-        similarity.build_ivfpq_index(emb.filter(F.col("vec_id") % 2 == 0), path)
-        similarity.update_ivfpq_index(emb.filter(F.col("vec_id") % 2 == 1), path)
-        retrain_ivfpq_index(spark, emb, path)
-        with open(os.path.join(path, "_RETRAIN_DONE"), "w") as fh:
-            fh.write("")
-    return path
+    emb = load_table(spark, sf_dir, "embeddings")
+    similarity.build_ivfpq_index(emb.filter(F.col("vec_id") % 2 == 0), path)
+    similarity.update_ivfpq_index(emb.filter(F.col("vec_id") % 2 == 1), path)
+    retrain_ivfpq_index(spark, emb, path)
 
 
 @_pending(

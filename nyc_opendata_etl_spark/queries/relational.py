@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from nyc_opendata_etl_spark.queries import register
 from nyc_opendata_etl_spark.queries._sql import PY_WS_RE2, money_sum
+from nyc_opendata_etl_spark.sources.staging import staged
 from nyc_opendata_etl_spark.sources.tables import load_table, spread
 
 
@@ -2290,40 +2291,47 @@ def q_sketch_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stage_copurchase_edges(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the DISTINCT part co-purchase edge relation once per
-    lineitem version as a BUCKETED table (sources/sinks.write_bucketed,
-    hash-clustered on ``a``) — the expensive per-basket self-join +
-    DISTINCT is write-time work; graph queries read the edge set and
-    joins/aggregations on ``a`` start from the persisted clustering with
-    no Exchange on the edge side. Returns the catalog table name,
-    re-registering the existing bucketed layout when a fresh staging
-    survives from an earlier session (bucketing metadata lives in the
-    catalog, not the files)."""
+@staged("copurchase_edges", "lineitem")
+def _stage_copurchase_edges(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The DISTINCT part co-purchase edge relation, materialized once
+    per lineitem version as a BUCKETED table (sources/sinks.
+    write_bucketed, hash-clustered on ``a``) — the expensive per-basket
+    self-join + DISTINCT is write-time work; graph queries read the
+    edge set and joins/aggregations on ``a`` start from the persisted
+    clustering with no Exchange on the edge side."""
+    from nyc_opendata_etl_spark.sources.sinks import write_bucketed
+
+    li = load_table(spark, sf_dir, "lineitem")
+    b = li.select(
+        F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
+    ).distinct()
+    b2 = b.select(F.col("ok"), F.col("pk").alias("pk2"))
+    edges = (
+        b.join(b2, "ok")
+        .filter(F.col("pk") < F.col("pk2"))
+        .select(F.col("pk").alias("a"), F.col("pk2").alias("b"))
+        .distinct()
+    )
+    tbl = _copurchase_table_name(sf_dir)
+    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    write_bucketed(edges, tbl, ["a"], 8, path)
+
+
+def _copurchase_table_name(sf_dir: str) -> str:
     import hashlib
 
-    from nyc_opendata_etl_spark.sources.sinks import write_bucketed
-    from nyc_opendata_etl_spark.sources.staging import is_stale, stage_dir
+    key = hashlib.md5(sf_dir.rstrip("/").encode()).hexdigest()[:12]
+    return f"copurchase_edges_{key}"
 
-    path = stage_dir(sf_dir, "copurchase_edges")
-    tbl = "copurchase_edges_" + hashlib.md5(
-        sf_dir.rstrip("/").encode()
-    ).hexdigest()[:12]
-    if is_stale(path, sf_dir, "lineitem"):
-        li = load_table(spark, sf_dir, "lineitem")
-        b = li.select(
-            F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
-        ).distinct()
-        b2 = b.select(F.col("ok"), F.col("pk").alias("pk2"))
-        edges = (
-            b.join(b2, "ok")
-            .filter(F.col("pk") < F.col("pk2"))
-            .select(F.col("pk").alias("a"), F.col("pk2").alias("b"))
-            .distinct()
-        )
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        write_bucketed(edges, tbl, ["a"], 8, path)
-    elif not spark.catalog.tableExists(tbl):
+
+def copurchase_edges_table(spark: SparkSession, sf_dir: str) -> str:
+    """Catalog name of the staged co-purchase edge table. A staging
+    that survives from an earlier session is re-registered over its
+    files as the same bucketed layout (bucketing metadata lives in the
+    catalog, not the files)."""
+    path = _stage_copurchase_edges(spark, sf_dir)
+    tbl = _copurchase_table_name(sf_dir)
+    if not spark.catalog.tableExists(tbl):
         spark.sql(
             f"CREATE TABLE {tbl} (a BIGINT, b BIGINT) USING PARQUET "
             f"CLUSTERED BY (a) SORTED BY (a) INTO 8 BUCKETS "
@@ -2379,7 +2387,7 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     6-dp-rounded single double division."""
     from nyc_opendata_etl_spark.operators.graph import triangle_count
 
-    tbl = _stage_copurchase_edges(spark, sf_dir)
+    tbl = copurchase_edges_table(spark, sf_dir)
     # the staged scan is cheap to replay — skip the operator's input
     # materialization (it exists for expensive in-query edge builds)
     return triangle_count(spark.table(tbl), materialize_input=False)

@@ -34,8 +34,9 @@ def _io_codec() -> str:
     codec = os.environ.get("SPARK_GRAFT_IO_CODEC", "zstd").strip().lower()
     if codec not in _IO_CODECS:
         raise ValueError(
-            f"SPARK_GRAFT_IO_CODEC={codec!r} is not a supported Spark codec; "
-            f"choose one of {sorted(_IO_CODECS)}"
+            f"SPARK_GRAFT_IO_CODEC={codec!r} is not accepted: only the short "
+            f"codec names {sorted(_IO_CODECS)} are (not CompressionCodec "
+            f"class names)"
         )
     return codec
 

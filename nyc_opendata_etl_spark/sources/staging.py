@@ -1,39 +1,65 @@
-"""Mtime-guarded staging of derived artifacts (indexes, materialized
-relations) keyed to a source table's version.
+"""Write-time staging: the one mechanism for derived artifacts.
 
 A real lakehouse stages write-time artifacts — posting lists, ANN
-indexes, pre-joined edge relations — alongside the data and rebuilds
-them when the source version advances. This module is the minimal local
-mirror of that: a deterministic staging directory per (sf_dir, kind)
-under the system temp dir, and a freshness check comparing the staged
-_SUCCESS marker's mtime against the source parquet's. Builders run at
-most once per source version per machine; every query execution after
-that probes the staged artifact.
+indexes, cluster maps, id-ordered stream sources, format copies —
+alongside the data and rebuilds them when the source version advances.
+Every such artifact in this engine is declared by decorating its
+builder::
 
-The generalization of the `_stage_documents` pattern in
-queries/parity.py (CSV/JSONL/ORC staging), factored out because round 7
-adds three more staged artifacts (text posting list, IVF-PQ index,
-co-purchase edge relation).
+    @staged("text_index", "documents")
+    def _stage_text_index(spark, sf_dir, path) -> None:
+        text.build_text_index(load_table(spark, sf_dir, "documents"), path)
+
+and called as ``_stage_text_index(spark, sf_dir) -> path``. The
+decorator owns the whole policy:
+
+- **Kind and path.** The artifact lives at ``stage_dir(sf_dir, kind)``:
+  ``<stage_root()>/spark_graft_stage/<sf name>_<sf path hash>/<kind>``.
+  ``$SPARK_GRAFT_STAGE_ROOT`` overrides the system temp dir, so
+  harnesses that isolate ``TMPDIR`` per child still share one staged
+  copy.
+- **Source table.** The artifact is stale once
+  ``<sf_dir>/<src_table>.parquet`` is newer than its marker.
+- **Marker.** One file, ``MARKER``, written last. It holds the md5 of
+  the builder's own source text (decorator line included), so editing
+  a builder invalidates its artifact on the next call. Only the
+  decorated body is hashed: a change to code the builder *calls*
+  invalidates nothing until the builder itself is edited.
+- **Rebuild from empty.** A stale artifact's directory is removed
+  before the builder runs, so nothing from a crashed or older build
+  survives into the new one.
+- **Ordered writes.** Stream sources that must replay in key order are
+  written by :func:`write_ordered`; :func:`stamp_in_order` gives files
+  strictly increasing mtimes, 1 s apart and backwards from now, and
+  checks them at the millisecond precision ``FileStreamSource``
+  orders by.
+
+:func:`stage_all` builds every registered artifact (``tools/
+stage_warmup.py`` and ``bench.py`` call it before any timed query).
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
+import inspect
 import os
+import shutil
 import tempfile
+import time
+from typing import Callable
+
+#: The completion marker every staged artifact carries (holds the
+#: builder-source hash).
+MARKER = "_STAGED"
+
+#: kind -> staged builder, in registration (import) order.
+STAGED: dict[str, Callable[..., str]] = {}
 
 
 def stage_root() -> str:
-    """Base directory all staged artifacts live under.
-
-    ``$SPARK_GRAFT_STAGE_ROOT`` overrides the system temp dir. The
-    override exists for harnesses that pin ``TMPDIR`` per subprocess to
-    isolate Spark scratch (tools/scale_sweep.py): without it, every
-    child resolves a fresh empty temp dir, rebuilds each write-time
-    index from scratch, and throws it away — so every recorded number
-    is build-inclusive and the build is never amortized, the opposite
-    of the write-time-staging architecture this module exists to model.
-    """
+    """Base directory all staged artifacts live under:
+    ``$SPARK_GRAFT_STAGE_ROOT`` or the system temp dir."""
     return os.environ.get("SPARK_GRAFT_STAGE_ROOT") or tempfile.gettempdir()
 
 
@@ -50,142 +76,121 @@ def stage_dir(sf_dir: str, kind: str) -> str:
     )
 
 
-def is_stale(stage: str, sf_dir: str, src_table: str, marker: str = "_SUCCESS") -> bool:
-    """True if the staged artifact is missing or older than the source
-    table's parquet — the rebuild trigger."""
-    src = os.path.join(sf_dir, f"{src_table}.parquet")
-    mk = os.path.join(stage, marker)
-    return not (
-        os.path.exists(mk) and os.path.getmtime(mk) > os.path.getmtime(src)
+def _is_stale(path: str, sf_dir: str, src_table: str, version: str) -> bool:
+    marker = os.path.join(path, MARKER)
+    try:
+        with open(marker) as fh:
+            if fh.read() != version:
+                return True
+        src = os.path.join(sf_dir, f"{src_table}.parquet")
+        return os.path.getmtime(marker) <= os.path.getmtime(src)
+    except FileNotFoundError:
+        return True
+
+
+def staged(kind: str, src_table: str):
+    """Declare ``build(spark, sf_dir, path) -> None`` as the builder of
+    the artifact ``kind`` derived from ``src_table``; the decorated name
+    becomes ``(spark, sf_dir) -> path`` (see the module docstring)."""
+
+    def deco(build):
+        version = hashlib.md5(inspect.getsource(build).encode()).hexdigest()
+
+        @functools.wraps(build)
+        def stage(spark, sf_dir: str) -> str:
+            path = stage_dir(sf_dir, kind)
+            if _is_stale(path, sf_dir, src_table, version):
+                shutil.rmtree(path, ignore_errors=True)
+                build(spark, sf_dir, path)
+                os.makedirs(path, exist_ok=True)
+                with open(os.path.join(path, MARKER), "w") as fh:
+                    fh.write(version)
+            return path
+
+        stage.version = version
+        STAGED[kind] = stage
+        return stage
+
+    return deco
+
+
+def stamp_in_order(paths: list[str]) -> None:
+    """Give ``paths`` strictly increasing mtimes in list order — the
+    order ``FileStreamSource`` replays them in. Stamps go 1 s apart
+    BACKWARDS from now, so none lies in the future (a future stamp
+    would outdate the marker written after it and mask a source
+    regenerated meanwhile). They are read back and must increase at
+    millisecond precision; a filesystem that collapses them raises
+    rather than leaving replay order to chance."""
+    now = time.time()
+    for i, p in enumerate(paths):
+        t = now - (len(paths) - i)
+        os.utime(p, (t, t))
+    ms = [int(os.path.getmtime(p) * 1000) for p in paths]
+    if any(a >= b for a, b in zip(ms, ms[1:])):
+        raise OSError(f"filesystem collapsed ordered mtimes: {paths}")
+
+
+def write_ordered(df, key: str, path: str, n_files: int) -> None:
+    """Write ``df`` as ``n_files`` parquet files range-partitioned and
+    sorted on ``key``, stamped so file replay order is key order (part
+    numbering is range order under ``repartitionByRange``)."""
+    (
+        df.repartitionByRange(n_files, key)
+        .sortWithinPartitions(key)
+        .write.mode("overwrite")
+        .parquet(path)
     )
+    parts = sorted(f for f in os.listdir(path) if f.startswith("part-"))
+    stamp_in_order([os.path.join(path, p) for p in parts])
+
+
+def fresh_run_dir(prefix: str) -> str:
+    """Per-invocation scratch dir for a streaming run (sink + index +
+    checkpoint), with two-sided leak control: dirs from THIS process
+    are removed at interpreter exit (the returned DataFrame is lazy, so
+    removal must outlive the caller), and orphans of crashed earlier
+    runs are reaped on the next invocation. Liveness, not age, decides
+    what is an orphan — a long run legitimately exceeds any age cutoff:
+    the owning pid is embedded in the dir name and probed with
+    ``os.kill(pid, 0)``; only dead owners are reaped. Dirs without a
+    pid tag fall back to a conservative 24 h mtime cutoff."""
+    import atexit
+    import glob
+    import re
+
+    for old in glob.glob(os.path.join(tempfile.gettempdir(), prefix + "*")):
+        m = re.match(re.escape(prefix) + r"p(\d+)_", os.path.basename(old))
+        try:
+            if m:
+                try:
+                    os.kill(int(m.group(1)), 0)
+                    continue  # owner alive — its run dir is not ours to reap
+                except ProcessLookupError:
+                    shutil.rmtree(old, ignore_errors=True)
+                except PermissionError:
+                    continue  # pid exists under another user — treat as live
+            elif os.path.getmtime(old) < time.time() - 86400:
+                shutil.rmtree(old, ignore_errors=True)
+        except OSError:
+            pass
+    run = tempfile.mkdtemp(prefix=f"{prefix}p{os.getpid()}_")
+    atexit.register(shutil.rmtree, run, ignore_errors=True)
+    return run
 
 
 def stage_all(spark, sf_dir: str) -> list[tuple[str, float]]:
-    """Run every write-time artifact builder for ``sf_dir``; returns
-    ``(label, seconds)`` per artifact. Builders are mtime-guarded, so a
-    warm call costs only the freshness probes (~0.1 s each).
+    """Build (or freshness-probe) every registered artifact for
+    ``sf_dir``; returns ``(kind, seconds)`` in registration order. A
+    warm call costs only the marker probes. ``bench.py`` runs this
+    before its timed suite and reports the cost as ``staging_sec``, so
+    a one-time rebuild is never read as a query regression."""
+    from nyc_opendata_etl_spark.queries import _load_all
 
-    The ONE enumeration of the engine's staged artifacts — shared by
-    ``tools/stage_warmup.py`` (explicit prebuild) and ``bench.py``
-    (which stages BEFORE the timed suite and reports the build cost as
-    its own ``staging_sec`` line, so per-round bench diffs never
-    conflate a one-time stage rebuild with a query regression — the
-    round-9 streaming "regression" was exactly that conflation)."""
-    import time
-
-    from nyc_opendata_etl_spark.queries.event_windows import (
-        _stage_events,
-        _stage_events_zordered,
-    )
-    from nyc_opendata_etl_spark.queries.llm_ops import (
-        _stage_chunk_text_index,
-        _stage_chunk_text_index_incremental,
-        _stage_dup_clusters,
-        _stage_fingerprint_index,
-        _stage_ivfpq_index,
-        _stage_ivfpq_index_incremental,
-        _stage_lsh_index,
-        _stage_text_index,
-        _stage_text_index_compacted,
-        _stage_text_index_incremental,
-    )
-    from nyc_opendata_etl_spark.queries.parity import _stage_documents
-    from nyc_opendata_etl_spark.queries.relational import _stage_copurchase_edges
-
-    from nyc_opendata_etl_spark.queries.pending_r13 import (
-        _stage_cdc_batches,
-        _stage_docs_idordered,
-        _stage_fingerprint_index_rc,
-    )
-    from nyc_opendata_etl_spark.queries.pending_r15 import (
-        _stage_dup_cluster_index_incr,
-        _stage_ivfpq_stream,
-    )
-    from nyc_opendata_etl_spark.queries.pending_r16 import (
-        _stage_cluster_stream,
-        _stage_ivfpq_index_deleted,
-    )
-
-    builders = [
-        ("text_index (BM25 postings)", lambda: _stage_text_index(spark, sf_dir)),
-        (
-            "chunk_text_index (passage-level BM25; r13)",
-            lambda: _stage_chunk_text_index(spark, sf_dir),
-        ),
-        (
-            # ADVICE r13: without this entry the incremental passage
-            # query's first bench execution paid the index build
-            # inside the timed query — the build/query conflation this
-            # module exists to prevent.
-            "chunk_text_index_incr (incremental passage BM25; r13)",
-            lambda: _stage_chunk_text_index_incremental(spark, sf_dir),
-        ),
-        (
-            "dup_clusters (near-dup cluster map; r14)",
-            lambda: _stage_dup_clusters(spark, sf_dir),
-        ),
-        (
-            "dup_cluster_index_incr2 (incremental cluster map; r15)",
-            lambda: _stage_dup_cluster_index_incr(spark, sf_dir),
-        ),
-        (
-            "ivfpq_index_stream (streaming ANN maintenance; r15)",
-            lambda: _stage_ivfpq_stream(spark, sf_dir),
-        ),
-        (
-            "dup_cluster_index_stream (streaming cluster map; pending r16)",
-            lambda: _stage_cluster_stream(spark, sf_dir),
-        ),
-        (
-            "ivfpq_index_deleted (ANN takedown lifecycle; pending r16)",
-            lambda: _stage_ivfpq_index_deleted(spark, sf_dir),
-        ),
-        (
-            "fingerprint_index_rc (deletion-capable dedup; pending r13)",
-            lambda: _stage_fingerprint_index_rc(spark, sf_dir),
-        ),
-        (
-            "docs_idordered (ingest stream source; pending r13)",
-            lambda: _stage_docs_idordered(spark, sf_dir),
-        ),
-        (
-            "cdc_customer_batches (SCD2 stream source; pending r13)",
-            lambda: _stage_cdc_batches(spark, sf_dir),
-        ),
-        (
-            "text_index_incr (incremental postings)",
-            lambda: _stage_text_index_incremental(spark, sf_dir),
-        ),
-        (
-            "text_index_del (delete+compact lifecycle)",
-            lambda: _stage_text_index_compacted(spark, sf_dir),
-        ),
-        ("ivfpq_index (ANN codebooks)", lambda: _stage_ivfpq_index(spark, sf_dir)),
-        (
-            "ivfpq_index_incr (incremental ANN)",
-            lambda: _stage_ivfpq_index_incremental(spark, sf_dir),
-        ),
-        (
-            "fingerprint_index (incremental dedup)",
-            lambda: _stage_fingerprint_index(spark, sf_dir),
-        ),
-        (
-            "lsh_bucket_index (incremental near-dup)",
-            lambda: _stage_lsh_index(spark, sf_dir),
-        ),
-        (
-            "copurchase_edges (bucketed graph)",
-            lambda: _stage_copurchase_edges(spark, sf_dir),
-        ),
-        ("events_zordered (layout)", lambda: _stage_events_zordered(spark, sf_dir)),
-        ("stream bronze (time-ordered)", lambda: _stage_events(spark, sf_dir)),
-        ("documents.csv", lambda: _stage_documents(spark, sf_dir, "csv")),
-        ("documents.jsonl", lambda: _stage_documents(spark, sf_dir, "jsonl")),
-        ("documents.orc", lambda: _stage_documents(spark, sf_dir, "orc")),
-    ]
+    _load_all()
     out = []
-    for label, build in builders:
+    for kind, stage in list(STAGED.items()):
         t0 = time.time()
-        build()
-        out.append((label, time.time() - t0))
+        stage(spark, sf_dir)
+        out.append((kind, time.time() - t0))
     return out

@@ -127,3 +127,38 @@ def test_oracle_outputs_never_emit_negative_zero():
                 offenders.append(name)
                 break
     assert not offenders, f"oracles emitting -0.0 cells: {offenders}"
+
+
+def test_staging_lives_in_one_module():
+    """One staging mechanism (sources/staging.py): no other package
+    module stamps mtimes, probes freshness or computes a stage path
+    itself, and every ``_stage_*`` builder under queries/ is declared
+    with ``@staged(kind, src_table)`` — a hand-rolled builder would
+    skip the version marker, the rebuild-from-empty rule and the
+    stage_all enumeration."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "nyc_opendata_etl_spark"
+    staging_py = pkg / "sources" / "staging.py"
+    banned = ("os.utime", "is_stale(", "stage_root(", "stage_dir(")
+    offenders = []
+    undecorated = []
+    for py in sorted(pkg.rglob("*.py")):
+        if py == staging_py:
+            continue
+        src = py.read_text()
+        offenders += [f"{py.name}: {b}" for b in banned if b in src]
+        if py.parent.name != "queries":
+            continue
+        for node in ast.parse(src).body:
+            if isinstance(node, ast.FunctionDef) and node.name.startswith("_stage_"):
+                decos = [
+                    d.func.id
+                    for d in node.decorator_list
+                    if isinstance(d, ast.Call) and isinstance(d.func, ast.Name)
+                ]
+                if "staged" not in decos:
+                    undecorated.append(f"{py.name}:{node.name}")
+    assert not offenders, f"staging logic outside sources/staging.py: {offenders}"
+    assert not undecorated, f"_stage_* builders without @staged: {undecorated}"

@@ -57,7 +57,7 @@ def test_fresh_run_dir_reaps_dead_owners_only(tmp_path, monkeypatch):
     survive below the 24 h fallback cutoff."""
     import tempfile
 
-    from nyc_opendata_etl_spark.queries.pending_r13 import _fresh_run_dir
+    from nyc_opendata_etl_spark.sources.staging import fresh_run_dir
 
     monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
     prefix = "graft_r14_reap_test_"
@@ -74,7 +74,7 @@ def test_fresh_run_dir_reaps_dead_owners_only(tmp_path, monkeypatch):
     legacy = tmp_path / f"{prefix}legacy"
     legacy.mkdir()
 
-    run = _fresh_run_dir(prefix)
+    run = fresh_run_dir(prefix)
     assert not dead.exists(), "dead-owner dir must be reaped"
     assert live.exists(), "live-owner dir must survive any age"
     assert legacy.exists(), "recent legacy dir must survive"

@@ -103,6 +103,7 @@ def test_stale_cluster_stream_restage_starts_empty(spark):
     from nyc_opendata_etl_spark.queries.pending_r16 import (
         _stage_cluster_stream,
     )
+    from nyc_opendata_etl_spark.sources.staging import MARKER
 
     sf = "/root/testdata/sf0.001"
     path = _stage_cluster_stream(spark, sf)
@@ -112,12 +113,12 @@ def test_stale_cluster_stream_restage_starts_empty(spark):
     os.makedirs(poison, exist_ok=True)
     with open(os.path.join(poison, "junk"), "w") as fh:
         fh.write("poison")
-    os.remove(os.path.join(path, "_STREAM_DONE"))  # simulate crashed drain
+    os.remove(os.path.join(path, MARKER))  # simulate crashed drain
 
     path2 = _stage_cluster_stream(spark, sf)
     assert path2 == path
     assert not os.path.exists(poison)
-    assert os.path.exists(os.path.join(path, "_STREAM_DONE"))
+    assert os.path.exists(os.path.join(path, MARKER))
     got = sorted(map(tuple, ci.read_dup_clusters(spark, path).collect()))
     assert got == want
 
@@ -140,13 +141,17 @@ def test_ivfpq_build_write_parallelizes_past_one_task_per_cell(
 
     par = spark.sparkContext.defaultParallelism
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    n_cells = 16
+    # half the session's parallelism, so the salt has room to spread
+    # each cell over >1 task on any core count
+    n_cells = max(1, par // 2)
     assert par > n_cells, "test needs parallelism above the cell count"
 
     # the adversarial shape the hash salt exists for: cells assigned by
     # id arithmetic, which a modulo salt would collapse into (a modulo
     # salt here is constant per cell — exactly one key per cell again)
-    cells = emb.selectExpr("vec_id as id", "cast(vec_id % 16 as int) as cid")
+    cells = emb.selectExpr(
+        "vec_id as id", f"cast(vec_id % {n_cells} as int) as cid"
+    )
     n_salt = -(-2 * par // n_cells)
     keys = cells.select(
         "cid", F.pmod(F.xxhash64("id"), F.lit(n_salt)).alias("s")
@@ -161,7 +166,7 @@ def test_ivfpq_build_write_parallelizes_past_one_task_per_cell(
     prev = spark.conf.get(coalesce_conf, "true")
     spark.conf.set(coalesce_conf, "false")
     try:
-        similarity.build_ivfpq_index(emb, idx)
+        similarity.build_ivfpq_index(emb, idx, n_centroids=n_cells)
     finally:
         spark.conf.set(coalesce_conf, prev)
     per_cell = []

@@ -45,19 +45,31 @@ def test_spread_width_fill_then_grow():
     assert _spread_width(512 << 20, par, 1 << 20) == 4 * par
 
 
-def test_spread_batch_reads_plan_stats_without_input_files(spark):
+def test_spread_batch_reads_plan_stats_without_input_files(spark, monkeypatch):
     """A DataFrame with NO inputFiles() (the foreachBatch shape — its
     scan is an internal batch relation) must still get a width from the
     optimizer's size statistics, not silently skip the spread (the r16
-    no-op this round fixed). A local relation has empty inputFiles and
-    known stats, reproducing the batch shape."""
-    df = spark.createDataFrame(
-        [(i, "x" * 2000) for i in range(3000)], "id long, text string"
-    ).coalesce(1)
+    no-op this round fixed). A range relation has empty inputFiles and
+    EXACT stats (8 bytes per row), so the recorded byte count proves the
+    stats path ran — the unknown-stats fallback (width = parallelism)
+    never reaches _spread_width."""
+    from nyc_opendata_etl_spark.streaming import ingest
+
+    seen = []
+
+    def recording_width(nbytes, par, target_bytes):
+        seen.append(nbytes)
+        return _spread_width(nbytes, par, target_bytes)
+
+    monkeypatch.setattr(ingest, "_spread_width", recording_width)
+    df = spark.range(0, 100_000, numPartitions=1)
     assert df.inputFiles() == []
     out = spread_batch(df, target_bytes=64 << 10)
-    # ~6 MB of local rows at a 64 KB target: the spread must have fired
-    assert out.rdd.getNumPartitions() > df.rdd.getNumPartitions()
+    assert seen == [800_000]
+    # 800 kB at a 64 kB target: 13 tasks (fill needs only 7), capped
+    # at 4× parallelism
+    par = spark.sparkContext.defaultParallelism
+    assert out.rdd.getNumPartitions() == min(13, 4 * par)
 
 
 def test_spread_batch_leaves_tiny_batches_alone(spark):
@@ -144,3 +156,62 @@ def test_build_star_raw_probes_match_dim_emptiness(spark):
     out2 = build_star(spark, empty_311, parking, facts=("311",))
     assert out2["dim_complaint"].count() == 0
     assert out2["fact_311_complaints"].count() == 0
+
+
+def test_build_star_stamped_dims_preserve_rows(spark):
+    """The raw-level F3 probes in build_star read dim emptiness off the
+    RAWS, which is only sound while every stamped dim builder is a
+    row-preserving chain: a raw with ≥ 1 rows — even one all-NULL row —
+    must yield a non-empty dim. A filter (e.g. the na.drop the unstamped
+    violation dim has) added to a stamped builder fails here instead of
+    silently flipping the fact schema branch."""
+    from nyc_opendata_etl_spark.functions.normalize import ensure_columns
+    from nyc_opendata_etl_spark.operators.warehouse import (
+        AGENCY_NK,
+        build_agency_dim,
+        build_complaint_dim,
+        build_location_dim,
+        build_vehicle_dim,
+    )
+
+    def null_row(cols: str):
+        schema = ", ".join(f"{c} string" for c in cols.split())
+        return spark.createDataFrame([tuple(None for _ in cols.split())], schema)
+
+    raw_311 = null_row(
+        "unique_key created_date closed_date agency agency_name "
+        "complaint_type descriptor location_type borough city incident_zip "
+        "street_name incident_address cross_street_1 cross_street_2 "
+        "intersection_street_1 intersection_street_2 latitude longitude status"
+    )
+    raw_parking = null_row(
+        "summons_number issue_date violation_time violation_code "
+        "violation_description plate_id registration_state plate_type "
+        "vehicle_body_type vehicle_make vehicle_year vehicle_color "
+        "unregistered_vehicle house_number street_name intersecting_street "
+        "violation_county violation_precinct"
+    )
+    # the stamped dims and their raws, as build_star's probe maps them
+    stamped = {
+        "dim_agency (311 side)": build_agency_dim(raw_311),
+        "dim_agency (parking side)": build_agency_dim(
+            ensure_columns(raw_parking, {c: "string" for c in AGENCY_NK})
+        ),
+        "dim_location": build_location_dim(raw_311),
+        "dim_complaint": build_complaint_dim(raw_311),
+        "dim_vehicle": build_vehicle_dim(raw_parking),
+    }
+    empty = [name for name, dim in stamped.items() if dim.isEmpty()]
+    assert not empty, f"stamped dims dropped an all-NULL raw row: {empty}"
+
+
+def test_io_codec_error_names_the_accepted_short_names(monkeypatch):
+    from nyc_opendata_etl_spark.session import _io_codec
+
+    monkeypatch.setenv(
+        "SPARK_GRAFT_IO_CODEC", "org.apache.spark.io.ZStdCompressionCodec"
+    )
+    with pytest.raises(ValueError, match="only the short codec names"):
+        _io_codec()
+    monkeypatch.setenv("SPARK_GRAFT_IO_CODEC", "ZSTD")
+    assert _io_codec() == "zstd"

@@ -155,11 +155,11 @@ def test_lateral_topn_matches_window_form(spark):
 def test_orc_round_trip_is_row_identical(spark):
     """ORC staging + re-read returns exactly the parquet rows — full
     multiset equality, not just the aggregate the oracle checks."""
-    from nyc_opendata_etl_spark.queries.parity import _stage_documents
+    from nyc_opendata_etl_spark.queries.parity import _stage_documents_orc
     from nyc_opendata_etl_spark.sources.formats import read_orc
 
     docs = load_table(spark, SF, "documents")
-    back = read_orc(spark, _stage_documents(spark, SF, "orc"))
+    back = read_orc(spark, _stage_documents_orc(spark, SF))
     assert back.schema == docs.schema
     assert back.exceptAll(docs).count() == 0
     assert docs.exceptAll(back).count() == 0

@@ -125,14 +125,14 @@ def test_staged_edges_reregister_preserves_bucketing(spark):
     metadata lives in the catalog, not the parquet files): drop the
     table, re-stage, and the bucket spec and edge set must survive."""
     from nyc_opendata_etl_spark.queries.relational import (
-        _stage_copurchase_edges,
+        copurchase_edges_table,
     )
 
-    tbl = _stage_copurchase_edges(spark, SF)
+    tbl = copurchase_edges_table(spark, SF)
     before = spark.table(tbl).count()
     assert before > 0
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")  # simulate a new session
-    tbl2 = _stage_copurchase_edges(spark, SF)
+    tbl2 = copurchase_edges_table(spark, SF)
     assert tbl2 == tbl
     desc = spark.sql(f"DESCRIBE TABLE EXTENDED {tbl}").collect()
     kv = {r["col_name"]: r["data_type"] for r in desc}

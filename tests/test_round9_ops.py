@@ -307,7 +307,7 @@ def test_weighted_quantiles_two_exchange_plan(spark):
 
 
 def test_stage_root_honors_env_override(monkeypatch, tmp_path):
-    """All three staging families resolve under $SPARK_GRAFT_STAGE_ROOT
+    """Every staged artifact resolves under $SPARK_GRAFT_STAGE_ROOT
     when set (the scale_sweep TMPDIR-isolation escape hatch) and under
     the system temp dir otherwise. Without the override, every sweep
     child rebuilt each write-time index into its throwaway TMPDIR — the

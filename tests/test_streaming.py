@@ -291,10 +291,13 @@ def test_interval_join_multibatch_equals_single_batch(spark):
     from pyspark.sql import functions as F
 
     from nyc_opendata_etl_spark.queries.event_windows import _stage_events
+    from nyc_opendata_etl_spark.sources.staging import MARKER
 
     stage = _stage_events(spark, SF_DIR)
     parts = sorted(p for p in os.listdir(stage) if p.startswith("part-"))
-    assert os.path.exists(os.path.join(stage, "_ORDERED"))
+    # the staged copy is the current ordered-layout build
+    with open(os.path.join(stage, MARKER)) as fh:
+        assert fh.read() == _stage_events.version
     # ascending mtimes in path order = replay order = event-time order
     mtimes = [os.path.getmtime(os.path.join(stage, p)) for p in parts]
     assert mtimes == sorted(mtimes)

@@ -1,11 +1,8 @@
 """Prebuild every write-time staged artifact for a table directory.
 
-The engine stages derived artifacts once per source version (the
-lakehouse write-time work): BM25 posting lists, the incremental text
-index, the IVF-PQ index, the bucketed co-purchase edge relation, the
-z-ordered events copy, the time-ordered streaming bronze copy, and the
-CSV/JSONL/ORC format stages. Queries amortize these; the FIRST query
-after a source-version change pays the build.
+The engine stages derived artifacts once per source version and
+builder version (sources/staging.py). Queries amortize these; the
+FIRST query after a source or builder change pays the build.
 
 This tool runs all builders up front so a following bench/sweep run
 measures pure query cost (the steady-state number a cluster sees),
@@ -35,10 +32,10 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     total = 0.0
-    for label, dt in stage_all(spark, sf_dir):
+    for kind, dt in stage_all(spark, sf_dir):
         total += dt
         state = "built" if dt > 1.0 else "warm"
-        print(f"{state:5s} {dt:7.1f}s  {label}")
+        print(f"{state:5s} {dt:7.1f}s  {kind}")
     print(f"total {total:7.1f}s  ({sf_dir})")
     return 0
 
