@@ -14,7 +14,7 @@ from nyc_opendata_etl_spark.functions.hashing import md5_long, md5_long_oracle_s
 from nyc_opendata_etl_spark.operators import dedup, similarity, text
 from nyc_opendata_etl_spark.queries import register
 from nyc_opendata_etl_spark.queries._sql import PY_WS_RE2
-from nyc_opendata_etl_spark.sources.staging import staged
+from nyc_opendata_etl_spark.sources.staging import fresh_run_dir, staged, write_ordered
 from nyc_opendata_etl_spark.sources.tables import load_table
 
 # canonical text form used by dedup ops, as DuckDB SQL
@@ -807,9 +807,7 @@ def q_text_tfidf_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.tfidf_top_terms(docs, k=3)
 
 
-@register(
-    "dedup_clusters",
-    oracle=f"""
+_DEDUP_CLUSTERS_SQL = f"""
     WITH RECURSIVE pairs AS ({_JACCARD_SQL}),
     edges AS (
         SELECT id_a AS src, id_b AS dst FROM pairs
@@ -823,8 +821,10 @@ def q_text_tfidf_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT src AS doc_id, least(src, min(dst)) AS cluster_id
     FROM reach GROUP BY src
-    """,
-)
+    """
+
+
+@register("dedup_clusters", oracle=_DEDUP_CLUSTERS_SQL)
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate clusters: connected components (iterative min-label
     propagation with lineage checkpoints) over the exact-Jaccard near-dup
@@ -837,24 +837,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.duplicate_clusters_collapsed(docs, threshold=0.8)
 
 
-@register(
-    "dedup_clusters_logstar",
-    oracle=f"""
-    WITH RECURSIVE pairs AS ({_JACCARD_SQL}),
-    edges AS (
-        SELECT id_a AS src, id_b AS dst FROM pairs
-        UNION
-        SELECT id_b AS src, id_a AS dst FROM pairs
-    ),
-    reach(src, dst) AS (
-        SELECT src, dst FROM edges
-        UNION
-        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-    )
-    SELECT src AS doc_id, least(src, min(dst)) AS cluster_id
-    FROM reach GROUP BY src
-    """,
-)
+@register("dedup_clusters_logstar", oracle=_DEDUP_CLUSTERS_SQL)
 def q_dedup_clusters_logstar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate clusters via LARGE-STAR/SMALL-STAR alternation
     (operators/dedup.duplicate_clusters_logstar; Kiveris et al. 2014)
@@ -2811,9 +2794,7 @@ def q_similarity_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.pq_encode(emb)
 
 
-@register(
-    "similarity_ivfpq_topk",
-    oracle="""
+_IVFPQ_TOPK_SQL = """
     WITH e AS (
         SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings
     ),
@@ -2887,8 +2868,10 @@ def q_similarity_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT t.id AS vec_id, t.adc_dist2,
            (x.id IS NOT NULL) AS in_exact_topk
     FROM top t LEFT JOIN ext x ON x.id = t.id
-    """,
-)
+    """
+
+
+@register("similarity_ivfpq_topk", oracle=_IVFPQ_TOPK_SQL)
 def q_similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ composed ANN as a STAGED-INDEX probe
     (operators/similarity.ivfpq_topk_indexed over build_ivfpq_index):
@@ -2908,16 +2891,14 @@ def q_similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.ivfpq_topk_indexed(spark, emb, index, query_vec_id=42)
 
 
-@register(
-    "similarity_ivfpq_incremental",
-    # Same protocol replay as similarity_ivfpq_topk with ONE semantic
-    # change: the quantizers (cents, pqc) come from the BUILD half only
-    # (even vec_ids) — the incremental update routes/encodes the odd
-    # half against those frozen quantizers, so the staged index equals
-    # a one-shot assignment of the FULL corpus against build-half
-    # quantizers. Query vector 43 is odd: it entered via the APPEND
-    # path, and its top-k candidates span both halves.
-    oracle="""
+# Same protocol replay as similarity_ivfpq_topk with ONE semantic
+# change: the quantizers (cents, pqc) come from the BUILD half only
+# (even vec_ids) — the incremental update routes/encodes the odd
+# half against those frozen quantizers, so the staged index equals
+# a one-shot assignment of the FULL corpus against build-half
+# quantizers. Query vector 43 is odd: it entered via the APPEND
+# path, and its top-k candidates span both halves.
+_IVFPQ_INCREMENTAL_SQL = """
     WITH e AS (
         SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings
     ),
@@ -2997,8 +2978,10 @@ def q_similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT t.id AS vec_id, t.adc_dist2,
            (x.id IS NOT NULL) AS in_exact_topk
     FROM top t LEFT JOIN ext x ON x.id = t.id
-    """,
-)
+    """
+
+
+@register("similarity_ivfpq_incremental", oracle=_IVFPQ_INCREMENTAL_SQL)
 def q_similarity_ivfpq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ probe over an INCREMENTALLY MAINTAINED staged index —
     the fourth and last staged-artifact granularity's O(new docs)
@@ -3018,9 +3001,7 @@ def q_similarity_ivfpq_incremental(spark: SparkSession, sf_dir: str) -> DataFram
     return similarity.ivfpq_topk_indexed(spark, emb, index, query_vec_id=43)
 
 
-@register(
-    "search_bm25",
-    oracle=f"""
+_BM25_SQL = f"""
     WITH d AS (SELECT doc_id, {_TOK} AS toks FROM documents),
     dl AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM d),
     stats AS (
@@ -3052,8 +3033,10 @@ def q_similarity_ivfpq_incremental(spark: SparkSession, sf_dir: str) -> DataFram
            CAST(count(*) AS BIGINT) AS n_hit_terms
     FROM contrib GROUP BY doc_id
     ORDER BY bm25 DESC, doc_id LIMIT 20
-    """,
-)
+    """
+
+
+@register("search_bm25", oracle=_BM25_SQL)
 def q_search_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 top-20 for the query {hash, join, vector} as a STAGED
     posting-list probe (operators/text.bm25_topk_indexed over
@@ -3549,8 +3532,6 @@ def q_search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(Window.orderBy(F.col("score").desc(), "doc_id")),
     )
     return text.rrf_fuse(ra, rb)
-
-
 
 
 @register(
@@ -4146,4 +4127,667 @@ def q_stats_chi2_contingency(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(exp, 6).alias("expected"),
             F.round(dev * dev / exp, 6).alias("chi2_contrib"),
         )
+    )
+
+
+@staged("fingerprint_index_rc", "documents")
+def _stage_fingerprint_index_rc(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The REFCOUNTED fingerprint delta log, staged once per corpus
+    version through every maintenance direction: base build from the
+    even half, an append batch (doc_id % 4 == 1), then a DELETE of
+    doc_id % 8 == 0 (a quarter of the evens — each withdrawn doc was
+    present exactly once, per the delete contract)."""
+    docs = load_table(spark, sf_dir, "documents")
+    dedup.build_fingerprint_index_rc(docs.filter(F.col("doc_id") % 2 == 0), path)
+    dedup.update_fingerprint_index_rc(docs.filter(F.col("doc_id") % 4 == 1), path)
+    dedup.delete_from_fingerprint_index_rc(docs.filter(F.col("doc_id") % 8 == 0), path)
+
+
+@register(
+    "dedup_incremental_rc",
+    oracle=f"""
+    WITH deltas AS (
+        SELECT {md5_long_oracle_sql(_CANON)} AS h,
+               CAST(count(*) AS BIGINT) AS cnt
+        FROM documents WHERE doc_id % 2 = 0 GROUP BY 1
+        UNION ALL
+        SELECT {md5_long_oracle_sql(_CANON)}, CAST(count(*) AS BIGINT)
+        FROM documents WHERE doc_id % 4 = 1 GROUP BY 1
+        UNION ALL
+        SELECT {md5_long_oracle_sql(_CANON)}, -CAST(count(*) AS BIGINT)
+        FROM documents WHERE doc_id % 8 = 0 GROUP BY 1
+    ),
+    live AS (SELECT h FROM deltas GROUP BY h HAVING sum(cnt) > 0),
+    probe AS (
+        SELECT doc_id, {md5_long_oracle_sql(_CANON)} AS h
+        FROM documents WHERE doc_id % 4 = 3
+    )
+    SELECT doc_id FROM probe p
+    WHERE NOT EXISTS (SELECT 1 FROM live l WHERE l.h = p.h)
+    """,
+)
+def q_dedup_incremental_rc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental dedup against the REFCOUNTED staged fingerprint
+    index — dedup_incremental's deletion-capable twin. The staged delta
+    log is built base + append + DELETE (doc_id % 8 == 0 withdrawn), so
+    the probe must treat a canon whose only copies were withdrawn as
+    NEW again while a canon with any surviving copy stays live — sum
+    semantics the bare-hash index cannot express. The oracle recomputes
+    the signed per-canon deltas from raw documents (verifying the
+    staged log's CONTENT, not just the join) and replays the
+    SUM(cnt) > 0 liveness rule. Probe plan: batch hashes broadcast into
+    a left-semi over the index scan + partial SUM — O(new docs), no
+    index shuffle (plan-pinned in tests/test_round12b_ops.py)."""
+    index_path = _stage_fingerprint_index_rc(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents", spread_input=True)
+    batch = docs.filter(F.col("doc_id") % 4 == 3)
+    return dedup.incremental_new_docs_rc(batch, spark.read.parquet(index_path))
+
+
+@staged("docs_idordered", "documents")
+def _stage_docs_idordered(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """Documents as 8 doc_id-range-ordered parquet files replayed in id
+    order (sources/staging.write_ordered). Ascending id ranges are what
+    make the ingest contract SQL-expressible: the first micro-batch
+    containing a canon holds that canon's smallest ids, so the
+    accepted doc per canon is the GLOBAL min id."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    write_ordered(docs, "doc_id", path, 8)
+
+
+@register(
+    "stream_dedup_ingest",
+    # The accepted corpus is exactly one doc per live canon, and with
+    # id-range-ordered micro-batches that doc is the canon's global
+    # min id — the exact_dedup_groups keep set, a plain SQL aggregate.
+    oracle=f"""
+    SELECT min(doc_id) AS doc_id
+    FROM (SELECT doc_id, {md5_long_oracle_sql(_CANON)} AS h FROM documents)
+    GROUP BY h
+    """,
+)
+def q_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming content-dedup ingestion (streaming/ingest.py) run as a
+    bounded AvailableNow drain: 4 micro-batches (8 staged files,
+    maxFilesPerTrigger=2) through the foreachBatch probe-then-update
+    kernel against the b-partitioned refcounted fingerprint log — both
+    writes idempotent per batch partition, the probe excluding the
+    current batch id (replay safety), within-batch collapse to the
+    min-id row. Index/sink/checkpoint live in a fresh per-run temp dir
+    (a run IS the unit here; the staged input is the cached artifact).
+    The differential gate then proves the whole pipeline — batching,
+    probe, idempotent writes — lands exactly the exact-dedup keep set.
+    100×: 8-batch 500k-doc drain in 24.6 s (SCALE_SWEEP_100X_r12),
+    after the two sweep-found batch-scale fixes (re-spread the
+    file-source batch, checkpoint the bounded collapse)."""
+    import uuid
+
+    from nyc_opendata_etl_spark.streaming.ingest import stream_dedup_ingest
+
+    src = _stage_docs_idordered(spark, sf_dir)
+    run = fresh_run_dir("spark_graft_ingest_run_")
+    stream = (
+        spark.readStream.schema("doc_id long, text string")
+        .option("maxFilesPerTrigger", "2")
+        .parquet(src)
+    )
+    stream_dedup_ingest(
+        stream,
+        f"{run}/idx",
+        f"{run}/out",
+        query_name=f"ingest_{uuid.uuid4().hex[:8]}",
+        checkpoint_location=f"{run}/ckpt",
+    )
+    return spark.read.parquet(f"{run}/out").select("doc_id")
+
+
+# Proof by identity: the streaming-built index must reproduce
+# search_bm25's EXACT result over the same corpus and terms, so the
+# two share one oracle — a BM25 constant tweak can never
+# desynchronize them.
+@register("stream_index_ingest", oracle=_BM25_SQL)
+def q_stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exactly-once STREAMING index maintenance
+    (streaming/index_ingest.py) run as a bounded AvailableNow drain:
+    the corpus arrives in 4 micro-batches (8 staged id-ordered files,
+    maxFilesPerTrigger=2) and each batch dynamic-overwrites only its
+    own postings/stats partitions — a replayed batch rewrites identical
+    content instead of double-appending (the defect update_text_index's
+    append mode would have under replay; pinned in
+    tests/test_round13_ops.py). The delta-aware probe derives df from
+    the pruned term postings and folds the per-batch stats, scoring
+    bit-identically to a from-scratch build — so the search_bm25 oracle
+    verifies batching, idempotent writes, AND the probe end to end.
+    Index/checkpoint live in a reaped per-run temp dir."""
+    import uuid
+
+    from nyc_opendata_etl_spark.streaming.index_ingest import (
+        bm25_topk_delta,
+        stream_index_ingest,
+    )
+
+    src = _stage_docs_idordered(spark, sf_dir)
+    run = fresh_run_dir("spark_graft_iidx_run_")
+    stream = (
+        spark.readStream.schema("doc_id long, text string")
+        .option("maxFilesPerTrigger", "2")
+        .parquet(src)
+    )
+    stream_index_ingest(
+        stream,
+        f"{run}/idx",
+        query_name=f"iidx_{uuid.uuid4().hex[:8]}",
+        checkpoint_location=f"{run}/ckpt",
+    )
+    return bm25_topk_delta(spark, f"{run}/idx", ["hash", "join", "vector"])
+
+
+@staged("dup_cluster_index_incr", "documents")
+def _stage_dup_cluster_index_incr(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The incremental cluster-map artifact, staged once per corpus
+    version: base build from the even half, one maintenance batch
+    (batch 0 — the build seeds batch −1) folding in the odd half
+    (operators/cluster_index.py)."""
+    from nyc_opendata_etl_spark.operators import cluster_index as ci
+
+    docs = load_table(spark, sf_dir, "documents")
+    ci.build_dup_cluster_index(docs.filter(F.col("doc_id") % 2 == 0), path)
+    ci.update_dup_cluster_index(
+        spark, docs.filter(F.col("doc_id") % 2 == 1), path, batch_id=0
+    )
+
+
+@staged("emb_idordered", "embeddings")
+def _stage_emb_idordered(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """Embeddings as 8 vec_id-range-ordered parquet files replayed in id
+    order (sources/staging.write_ordered), so the ANN ingest stream
+    drains in deterministic id-ordered micro-batches."""
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    write_ordered(emb, "vec_id", path, 8)
+
+
+@staged("ivfpq_index_stream", "embeddings")
+def _stage_ivfpq_stream(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The STREAMING-built IVF-PQ index, staged once per corpus version:
+    quantizers (centroids/codebook/params) come from a build over the
+    even-vec_id half — the similarity_ivfpq_incremental geometry, so
+    that query's oracle transfers verbatim — but the build's codes are
+    DISCARDED and the FULL corpus arrives through the exactly-once
+    streaming sink (4 AvailableNow micro-batches over 8 id-ordered
+    files), each batch dynamic-overwriting its own (batch, cid)
+    partitions."""
+    import os
+    import shutil
+    import uuid
+
+    from nyc_opendata_etl_spark.operators import similarity
+    from nyc_opendata_etl_spark.streaming.ann_ingest import stream_ivfpq_ingest
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    similarity.build_ivfpq_index(emb.filter(F.col("vec_id") % 2 == 0), path)
+    # codes arrive via the stream under the (batch, cid) layout — the
+    # build's cid-only codes would break partition discovery
+    shutil.rmtree(os.path.join(path, "codes"), ignore_errors=True)
+    src = _stage_emb_idordered(spark, sf_dir)
+    run = fresh_run_dir("spark_graft_annidx_run_")
+    stream = (
+        spark.readStream.schema("vec_id long, embedding array<float>")
+        .option("maxFilesPerTrigger", "2")
+        .parquet(src)
+    )
+    stream_ivfpq_ingest(
+        stream,
+        path,
+        query_name=f"annidx_{uuid.uuid4().hex[:8]}",
+        checkpoint_location=f"{run}/ckpt",
+    )
+
+
+# Proof by identity: the streaming-built index must reproduce the
+# batch-incremental index's EXACT probe result (both are the full
+# corpus routed/encoded against the even-half quantizers), so its
+# oracle is similarity_ivfpq_incremental's — a quantizer or ADC tweak
+# can never desynchronize the two.
+@register("stream_ivfpq_ingest", oracle=_IVFPQ_INCREMENTAL_SQL)
+def q_stream_ivfpq_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exactly-once STREAMING ANN index maintenance
+    (streaming/ann_ingest.py) run as a bounded AvailableNow drain: the
+    embedding corpus arrives in 4 micro-batches and each batch
+    dynamic-overwrites only its own (batch, cid) code partitions — a
+    replayed batch rewrites identical content instead of appending
+    duplicate code rows (which would silently DOUBLE a candidate's
+    ADC distance in the probe's groupBy(id) sum; the defect
+    update_ivfpq_index's append mode would have under replay).
+    Quantizers are frozen from the even-half build (the FAISS add()
+    contract), so the streamed index state equals
+    similarity_ivfpq_incremental's and the unchanged probe
+    (ivfpq_topk_indexed — cid partition pruning works under every
+    batch= directory) scores bit-identically; that query's oracle
+    verifies batching, idempotent writes, AND the probe end to end."""
+    emb = load_table(spark, sf_dir, "embeddings", spread_input=True)
+    index = _stage_ivfpq_stream(spark, sf_dir)
+    return similarity.ivfpq_topk_indexed(spark, emb, index, query_vec_id=43)
+
+
+# Proof by identity: the incrementally maintained cluster map must
+# reproduce dedup_clusters' EXACT output over the same corpus, so
+# its oracle is dedup_clusters' recursive-CTE oracle — a threshold
+# or shingle tweak can never desynchronize the two.
+@register("dedup_clusters_incremental", oracle=_DEDUP_CLUSTERS_SQL)
+def q_dedup_clusters_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-dup clusters from the INCREMENTALLY maintained staged
+    cluster map (operators/cluster_index.py): the even half of the
+    corpus is clustered from scratch, the odd half folded in as a
+    maintenance batch — new docs probe the staged AllPairs prefix
+    index (lossless across batches: the canonical shingle-hash order
+    is global), identical texts join their group by content hash
+    without any pair work, and connected components run on the DELTA
+    graph with old clusters contracted to their label nodes. A green
+    row proves append + contract-merge + relabel reconstructs exactly
+    the from-scratch clustering — the hourly-ingest-vs-nightly-
+    re-cluster contract a 100 TB dedup service depends on (the
+    search_bm25_incremental proof, clustering edition). Completes the
+    incremental-index family: posting list, LSH buckets,
+    fingerprint/rc, IVF-PQ, and now the cluster map itself."""
+    from nyc_opendata_etl_spark.operators import cluster_index as ci
+
+    path = _stage_dup_cluster_index_incr(spark, sf_dir)
+    return ci.read_dup_clusters(spark, path)
+
+
+@staged("docs_odd_idordered", "documents")
+def _stage_docs_odd_idordered(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The ODD-doc_id half of documents as 8 id-range-ordered parquet
+    files replayed in id order (sources/staging.write_ordered), so the
+    cluster ingest stream drains the maintenance half in deterministic
+    id-ordered micro-batches whose ids are disjoint from the even-half
+    build — the batch updater's new-ids-only contract."""
+    docs = load_table(spark, sf_dir, "documents")
+    odd = docs.filter(F.col("doc_id") % 2 == 1).select("doc_id", "text")
+    write_ordered(odd, "doc_id", path, 8)
+
+
+@staged("dup_cluster_index_stream", "documents")
+def _stage_cluster_stream(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The STREAMING-maintained cluster map, staged once per corpus
+    version: from-scratch build over the even half (batch −1), then
+    the odd half arrives through the exactly-once streaming sink
+    (4 AvailableNow micro-batches over 8 id-ordered files), each epoch
+    folding O(batch) work into the artifact — the
+    dedup_clusters_incremental geometry with the single maintenance
+    batch replaced by a genuine Structured Streaming drain, so that
+    query's oracle transfers VERBATIM."""
+    import uuid
+
+    from nyc_opendata_etl_spark.operators import cluster_index as ci
+    from nyc_opendata_etl_spark.streaming.cluster_ingest import (
+        stream_cluster_ingest,
+    )
+
+    docs = load_table(spark, sf_dir, "documents")
+    ci.build_dup_cluster_index(docs.filter(F.col("doc_id") % 2 == 0), path)
+    src = _stage_docs_odd_idordered(spark, sf_dir)
+    run = fresh_run_dir("spark_graft_clidx_run_")
+    stream = (
+        spark.readStream.schema("doc_id long, text string")
+        .option("maxFilesPerTrigger", "2")
+        .parquet(src)
+    )
+    stream_cluster_ingest(
+        stream,
+        path,
+        query_name=f"clidx_{uuid.uuid4().hex[:8]}",
+        checkpoint_location=f"{run}/ckpt",
+    )
+
+
+# Proof by identity: the streamed cluster map must reproduce
+# dedup_clusters' EXACT output over the same corpus, so its oracle
+# is dedup_clusters' recursive-CTE oracle (the
+# dedup_clusters_incremental proof, streaming edition).
+@register("stream_cluster_ingest", oracle=_DEDUP_CLUSTERS_SQL)
+def q_stream_cluster_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-dup clusters from the STREAMING-maintained cluster map
+    (streaming/cluster_ingest.py): the even half is clustered from
+    scratch, the odd half arrives in 4 exactly-once micro-batches,
+    each folded in O(batch) by the replay-idempotent batch updater —
+    strictly-below-batch reads + per-batch dynamic overwrite mean a
+    replayed epoch rewrites byte-identical content (no marker, no
+    dedup pass; the property the r15 ADVICE rework bought). A green
+    row proves 4 successive contract-preserving folds reconstruct the
+    from-scratch clustering through a real Structured Streaming drain
+    — the hourly-cluster-ingest contract end to end. Completes the
+    streaming maintenance family: BM25 postings, IVF-PQ codes, and
+    now the cluster map."""
+    from nyc_opendata_etl_spark.operators import cluster_index as ci
+
+    path = _stage_cluster_stream(spark, sf_dir)
+    return ci.read_dup_clusters(spark, path)
+
+
+@staged("ivfpq_index_deleted", "embeddings")
+def _stage_ivfpq_index_deleted(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The DELETION lifecycle of the IVF-PQ index: incremental
+    construction (build even half, append odd half — the
+    similarity_ivfpq_incremental geometry, so that oracle transfers by
+    derivation), then TAKEDOWN of every vec_id ≡ 3 (mod 7) via
+    compact_ivfpq_index(delete_ids) — code rows dropped and the
+    cell-partitioned layout rewritten, quantizers untouched (they
+    survive deletion even of their own training vectors: vec_id 10 is
+    both a centroid source and deleted, deliberately)."""
+    from nyc_opendata_etl_spark.operators import similarity
+    from nyc_opendata_etl_spark.operators.index_maintenance import (
+        compact_ivfpq_index,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    similarity.build_ivfpq_index(emb.filter(F.col("vec_id") % 2 == 0), path)
+    similarity.update_ivfpq_index(emb.filter(F.col("vec_id") % 2 == 1), path)
+    compact_ivfpq_index(
+        spark,
+        path,
+        delete_ids=emb.filter(F.col("vec_id") % 7 == 3).select(
+            F.col("vec_id").alias("id")
+        ),
+    )
+
+
+def _ivfpq_after_delete_oracle() -> str:
+    """similarity_ivfpq_incremental's oracle BY DERIVATION: identical
+    protocol replay (build-half quantizers, full-corpus assignment)
+    with deleted vectors excluded from candidacy AND from the exact
+    top-k the recall boolean compares against. Derived, not copied, so
+    a quantizer/ADC tweak in the parent oracle flows through; the
+    anchors are asserted so a parent edit that breaks them fails at
+    import, not silently at compare time."""
+    base = _IVFPQ_INCREMENTAL_SQL
+    a1 = "JOIN probes p ON a.cid = p.cid WHERE a.vec_id <> 43"
+    a2 = "WHERE e.vec_id <> 43"
+    assert base.count(a1) == 1 and base.count(a2) == 1, (
+        "parent oracle anchors moved; re-derive the after-delete oracle"
+    )
+    out = base.replace(a1, a1 + " AND a.vec_id % 7 <> 3")
+    out = out.replace(a2, a2 + " AND e.vec_id % 7 <> 3")
+    return out
+
+
+@register("similarity_after_delete", oracle=_ivfpq_after_delete_oracle())
+def q_similarity_after_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF-PQ probe AFTER TAKEDOWN — the deletion lifecycle the text
+    index already proves (search_bm25_after_delete), ANN edition,
+    completing the IVF-PQ family's lifecycle: build, incremental
+    append, exactly-once streaming ingest, and now delete + compact.
+    Every vec_id ≡ 3 (mod 7) is removed from the staged incremental
+    index via compact_ivfpq_index (code rows dropped, cell layout
+    rewritten, quantizers kept — the FAISS remove_ids() contract);
+    the unchanged probe (query 43, a survivor) must then return
+    exactly what the derivation oracle computes over survivors — a
+    green row proves deleted vectors can never resurface as
+    candidates AND that the exact-recall boolean is judged against
+    the surviving corpus, the right-to-be-forgotten contract for an
+    embedding store."""
+    emb = load_table(spark, sf_dir, "embeddings", spread_input=True)
+    index = _stage_ivfpq_index_deleted(spark, sf_dir)
+    return similarity.ivfpq_topk_indexed(spark, emb, index, query_vec_id=43)
+
+
+@staged("ivfpq_index_retrained", "embeddings")
+def _stage_ivfpq_index_retrained(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The RE-TRAIN lifecycle of the IVF-PQ index: incremental
+    construction with deliberately DRIFTED quantizers (build the even
+    half — its convention centroids are the 8 even vec_ids < 16 —
+    then append the odd half against those stale cells), then heal via
+    retrain_ivfpq_index over the CURRENT full corpus, which recomputes
+    the convention quantizers (now all 16 vec_ids < 16), re-encodes
+    every vector, and atomically swaps the whole index directory (the
+    staging marker lands after the swap, in the new directory)."""
+    from nyc_opendata_etl_spark.operators import similarity
+    from nyc_opendata_etl_spark.operators.index_maintenance import (
+        retrain_ivfpq_index,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    similarity.build_ivfpq_index(emb.filter(F.col("vec_id") % 2 == 0), path)
+    similarity.update_ivfpq_index(emb.filter(F.col("vec_id") % 2 == 1), path)
+    retrain_ivfpq_index(spark, emb, path)
+
+
+# Proof by identity: a retrained index must be read-equivalent to a
+# FRESH build over the current corpus, so its oracle is
+# similarity_ivfpq_topk's full-corpus fresh-build oracle — a
+# quantizer or ADC tweak can never desynchronize the two. Same probe
+# (query 42).
+@register("similarity_ivfpq_retrain", oracle=_IVFPQ_TOPK_SQL)
+def q_similarity_ivfpq_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF-PQ probe AFTER QUANTIZER RE-TRAIN — the drift-heal pass
+    every append defers to (update_ivfpq_index reuses build quantizers,
+    the FAISS add() contract; after enough turnover the cells stop
+    describing the corpus). The staged index is built with stale
+    even-half quantizers, appended, then retrained from the full
+    corpus via operators/index_maintenance.retrain_ivfpq_index (same
+    recorded params, whole-directory atomic swap — quantizers and
+    codes never mix across versions). A green row proves the retrained
+    index answers EXACTLY like a fresh build over the current corpus —
+    completing the ANN lifecycle: build / incremental append /
+    exactly-once streaming ingest / delete+compact / retrain."""
+    emb = load_table(spark, sf_dir, "embeddings", spread_input=True)
+    index = _stage_ivfpq_index_retrained(spark, sf_dir)
+    return similarity.ivfpq_topk_indexed(spark, emb, index, query_vec_id=42)
+
+
+_SHARD_SEED = 42
+_N_SHARDS = 8
+_SHARD_HV = md5_long_oracle_sql(
+    f"concat_ws('|', '{_SHARD_SEED}', CAST(doc_id AS VARCHAR))"
+)
+
+
+@register(
+    "corpus_shard_epoch",
+    oracle=f"""
+    WITH h AS (
+        SELECT doc_id, {_SHARD_HV} AS hv
+        FROM documents
+    )
+    SELECT doc_id,
+           CAST(hv % {_N_SHARDS} AS INT) AS shard,
+           CAST(row_number() OVER (
+               PARTITION BY hv % {_N_SHARDS} ORDER BY hv, doc_id
+           ) AS BIGINT) AS pos
+    FROM h
+    """,
+)
+def q_corpus_shard_epoch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic seeded epoch shuffle + sharding
+    (operators/curation.shard_epoch): every document gets a (shard,
+    pos) such that reading shards in (shard, pos) order is a
+    seed-keyed pseudo-random permutation of the corpus — the LAST step
+    of a pretraining pipeline (epoch order must be random-looking,
+    reproducible across restarts, and writable as n_shards independent
+    streams). One shuffle (per-shard sort window), no global total
+    order — n_shards parallel sorts at 100 TB, never a single-partition
+    sort."""
+    from nyc_opendata_etl_spark.operators.curation import shard_epoch
+
+    docs = load_table(spark, sf_dir, "documents")
+    return shard_epoch(docs, seed=_SHARD_SEED, n_shards=_N_SHARDS)
+
+
+_KNN_COS_AC = _cos_sql("a.v", "c.cvec")
+_KNN_COS_QC = _cos_sql("q.qvec", "c.cvec")
+_KNN_COS_AQ = _cos_sql("a.v", "p.qvec")
+
+
+# The WITH-chain of the batched k-NN protocol (assignment, probe
+# selection, cell-restricted scoring, per-query ranking), shared
+# VERBATIM by the similarity_knn_join and corpus_knn_label oracles —
+# a protocol tweak can never desynchronize the two.
+_KNN_RANKED_CTE = f"""
+    WITH c AS (
+        SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cvec
+        FROM embeddings WHERE vec_id < 64
+    ),
+    e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+    ascored AS (
+        SELECT a.vec_id, a.v, c.cid, {_KNN_COS_AC} AS sim
+        FROM e a CROSS JOIN c
+    ),
+    assigned AS (
+        -- sim IS NOT NULL mirrors _ivf_assign's NULL-best drop
+        SELECT vec_id, v, cid FROM (
+            SELECT *, row_number() OVER (PARTITION BY vec_id
+                                         ORDER BY sim DESC, cid) AS rn
+            FROM ascored
+        ) WHERE rn = 1 AND sim IS NOT NULL
+    ),
+    q AS (
+        SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qvec
+        FROM embeddings WHERE vec_id % 20 = 3
+    ),
+    qscored AS (
+        SELECT q.query_id, q.qvec, c.cid, {_KNN_COS_QC} AS sim
+        FROM q CROSS JOIN c
+    ),
+    probes AS (
+        SELECT query_id, qvec, cid FROM (
+            SELECT *, row_number() OVER (PARTITION BY query_id
+                                         ORDER BY sim DESC, cid) AS rn
+            FROM qscored WHERE sim IS NOT NULL
+        ) WHERE rn <= 2
+    ),
+    cand AS (
+        SELECT p.query_id, a.vec_id,
+               -- "+ 0" folds a possible -0.0 to +0.0: Spark's round()
+               -- (BigDecimal) never emits -0.0, DuckDB's and numpy's
+               -- keep it, and the driver compare distinguishes reprs
+               round({_KNN_COS_AQ}, 6) + 0 AS cosine_sim
+        FROM probes p JOIN assigned a USING (cid)
+        WHERE p.query_id <> a.vec_id
+    ),
+    ranked AS (
+        SELECT *, row_number() OVER (PARTITION BY query_id
+                                     ORDER BY cosine_sim DESC, vec_id) AS rk
+        FROM cand
+    )"""
+
+
+@register(
+    "similarity_knn_join",
+    # the oracle replays the full batched protocol: one shared corpus
+    # assignment, per-query probe selection, cell-restricted re-rank
+    oracle=_KNN_RANKED_CTE
+    + """
+    SELECT query_id, vec_id, cosine_sim, CAST(rk AS INT) AS rk
+    FROM ranked WHERE rk <= 5
+    """,
+)
+def q_similarity_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Batched IVF k-NN JOIN (operators/similarity.knn_join): every
+    query vector (the ``vec_id % 20 == 3`` slice — an SF-scaling query
+    set, ~5% of the corpus) gets its top-5 corpus neighbors restricted
+    to its 2 nearest of 64 coarse cells. The amortized many-queries
+    form the single-probe ANN ops don't cover: ONE shared corpus cell
+    assignment, candidate volume Q·N·(n_probe/C), each cell scored as
+    one unit-normalized float64 GEMM via cogroup-applyInPandas with
+    per-cell top-k (the "expr" kernel — plain cid join, no forced
+    broadcast, per-pair fold — is the pinned-identical declarative
+    twin), one bounded row_number window per query for the global
+    top-k. Deterministic end-to-end, so the DuckDB oracle replays
+    assignment, probing, and re-rank exactly."""
+    emb = load_table(spark, sf_dir, "embeddings", spread_input=True)
+    return similarity.knn_join(
+        emb,
+        emb.filter(F.col("vec_id") % 20 == 3),
+        n_centroids=64,
+        n_probe=2,
+        k=5,
+    )
+
+
+_DSEM_COS = _cos_sql("t.embedding", "ev.embedding")
+
+
+@register(
+    "corpus_decontaminate_semantic",
+    oracle=f"""
+    WITH t AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 50 <> 0),
+    ev AS (SELECT vec_id AS eval_id, embedding FROM embeddings WHERE vec_id % 50 = 0),
+    hit AS (
+        SELECT t.vec_id, ev.eval_id, round({_DSEM_COS}, 6) + 0 AS sim
+        FROM t CROSS JOIN ev
+        WHERE round({_DSEM_COS}, 6) >= 0.3
+    )
+    SELECT vec_id,
+           count(*) AS n_eval_hits,
+           max(sim) AS max_cosine,
+           CAST(first(eval_id ORDER BY sim DESC, eval_id) AS BIGINT)
+               AS best_eval_id
+    FROM hit GROUP BY vec_id
+    """,
+)
+def q_corpus_decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding-space benchmark decontamination
+    (operators/curation.decontaminate_semantic): train vectors
+    (``vec_id % 50 != 0``) scoring cosine ≥ 0.3 against ANY eval
+    vector (``% 50 == 0`` — the stand-in benchmark suite, bounded by
+    construction) are flagged with hit count, best similarity, and the
+    matching eval id. The semantic twin of ``corpus_decontaminate``:
+    paraphrased leakage shares no 3-gram shingle but keeps its
+    embedding neighborhood. Eval side broadcasts (bounded benchmark
+    contract — NOT an SF-scaling relation), train side is one scan +
+    map-side aggregate: no train shuffle at any corpus size. Exact on
+    purpose — a pruning false negative here is eval data left in the
+    training set."""
+    from nyc_opendata_etl_spark.operators.curation import decontaminate_semantic
+
+    emb = load_table(spark, sf_dir, "embeddings", spread_input=True)
+    return decontaminate_semantic(
+        emb.filter(F.col("vec_id") % 50 != 0),
+        emb.filter(F.col("vec_id") % 50 == 0),
+        threshold=0.3,
+    )
+
+
+@register(
+    "corpus_knn_label",
+    # knn protocol CTE shared VERBATIM with similarity_knn_join's
+    # oracle; only the vote aggregation is new
+    oracle=_KNN_RANKED_CTE
+    + """
+    , lab AS (
+        SELECT r.query_id, e2.label
+        FROM ranked r JOIN embeddings e2 ON r.vec_id = e2.vec_id
+        WHERE r.rk <= 5 AND e2.label IS NOT NULL
+    ),
+    v AS (
+        SELECT query_id, label, count(*) AS votes
+        FROM lab GROUP BY 1, 2
+    )
+    SELECT query_id,
+           CAST(first(label ORDER BY votes DESC, label) AS INT)
+               AS pred_label,
+           CAST(first(votes ORDER BY votes DESC, label) AS BIGINT)
+               AS votes,
+           CAST(sum(votes) AS BIGINT) AS n_neighbors
+    FROM v GROUP BY query_id
+    """,
+)
+def q_corpus_knn_label(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """k-NN label transfer (operators/similarity.knn_label): the
+    ``vec_id % 20 == 3`` query slice is classified by the majority
+    label of its top-5 knn_join neighbors — the quality-classifier
+    bootstrap of LLM data curation (hand-label a seed, propagate
+    through embedding neighborhoods, train the cheap classifier on
+    the propagation). Pure composition: knn_join (same cells/probe/k
+    as similarity_knn_join — the oracle literally shares its WITH
+    chain) + a label join-back on a bounded Q·k relation + two hash
+    aggregates with a (votes, smaller-label) deterministic tie. Votes
+    count labeled neighbors only."""
+    emb = load_table(spark, sf_dir, "embeddings", spread_input=True)
+    return similarity.knn_label(
+        emb,
+        emb.filter(F.col("vec_id") % 20 == 3),
+        n_centroids=64,
+        n_probe=2,
+        k=5,
     )

@@ -25,22 +25,14 @@ from __future__ import annotations
 
 import os
 
-import duckdb
-
 from nyc_opendata_etl_spark.queries import _ordered
+from tools.check_correctness import connect
 
 SF_DIR = os.environ.get("SPARK_GRAFT_LINT_SF_DIR", "/root/testdata/sf0.001")
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
-
 
 def test_oracle_columns_never_hugeint():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+    con = connect(SF_DIR)
     offenders: dict[str, list[str]] = {}
     for name, qd in _ordered().items():
         if qd.oracle is None:
@@ -78,22 +70,28 @@ def test_spark_outputs_are_scalar_typed(spark):
     )
 
 
-def test_recheck_and_verified_names_exist():
-    """Every name in the rotation inputs (_RECHECK_* prefix list and
-    _LAST_VERIFIED ledger) must be a registered query — a typo here
-    silently drops a query from the driver's verification prefix."""
+def test_every_query_function_is_registered():
+    """``@register`` is the only way a query enters the engine: every
+    top-level ``q_*`` function under queries/ is the ``fn`` of a
+    REGISTRY entry, so a built-but-unregistered query (which the driver
+    never samples) cannot come back."""
+    import ast
+    import importlib
+    import pathlib
+    import pkgutil
+
     import nyc_opendata_etl_spark.queries as q
 
     q._load_all()
-    recheck_lists = {
-        k: v for k, v in vars(q).items() if k.startswith("_RECHECK_R")
-    }
-    assert recheck_lists, "no _RECHECK_R* list found in queries/__init__"
-    for attr, recheck in recheck_lists.items():
-        missing = [n for n in recheck if n not in q.REGISTRY]
-        assert not missing, f"{attr} names not in registry: {missing}"
-    stale = [n for n in q._LAST_VERIFIED if n not in q.REGISTRY]
-    assert not stale, f"_LAST_VERIFIED names not in registry: {stale}"
+    registered = {qd.fn for qd in q.REGISTRY.values()}
+    unregistered = []
+    for info in pkgutil.iter_modules(q.__path__):
+        mod = importlib.import_module(f"{q.__name__}.{info.name}")
+        for node in ast.parse(pathlib.Path(mod.__file__).read_text()).body:
+            if isinstance(node, ast.FunctionDef) and node.name.startswith("q_"):
+                if getattr(mod, node.name) not in registered:
+                    unregistered.append(f"{info.name}:{node.name}")
+    assert not unregistered, f"q_* functions not in REGISTRY: {unregistered}"
 
 
 def test_oracle_outputs_never_emit_negative_zero():
@@ -102,21 +100,14 @@ def test_oracle_outputs_never_emit_negative_zero():
     np.round keep it, and the repr-based value compare distinguishes
     them — so an oracle cell of -0.0 is a latent hash mismatch. The
     registered surface is deterministically safe on the fixed testdata
-    (this test IS that proof, re-run every suite); pending kernels and
+    (this test IS that proof, re-run every suite); new kernels and
     oracles normalize with `+ 0` / `sims += 0.0`. A failure here means
     a new oracle (or new testdata) crossed the law — normalize its
-    rounding the pending_r17 way, don't relax the pin."""
+    rounding the similarity_knn_join way, don't relax the pin."""
     import math
 
-    from nyc_opendata_etl_spark.queries.pending_r17 import PENDING as P17
-    from nyc_opendata_etl_spark.queries.pending_r18 import PENDING as P18
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+    con = connect(SF_DIR)
     oracles = {n: qd.oracle for n, qd in _ordered().items() if qd.oracle}
-    oracles.update({n: o for n, (_, o) in P17.items()})
-    oracles.update({n: o for n, (_, o) in P18.items()})
     offenders = []
     for name, sql in oracles.items():
         for row in con.execute(sql).fetchall():

@@ -1,8 +1,9 @@
 """Local differential checker mimicking the driver's t2 gate.
 
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
-DuckDB at the given sf dir, comparing row count, column names/types, and
-exact values (order-insensitive). Reports per-query PASS/FAIL with diffs.
+DuckDB at the given sf dir with :func:`mismatch`: row count, column names
+(not types), and exact values (order-insensitive). Reports per-query
+PASS/FAIL with diffs.
 
 Usage: python tools/check_correctness.py [sf_dir] [query ...]
 """
@@ -20,6 +21,7 @@ import duckdb  # noqa: E402
 
 from nyc_opendata_etl_spark.queries import oracle_sql, queries  # noqa: E402
 from nyc_opendata_etl_spark.session import get_spark  # noqa: E402
+from nyc_opendata_etl_spark.sources.tables import TABLES  # noqa: E402
 
 
 def _canon_cell(v):
@@ -39,20 +41,45 @@ def _canon_rows(cols, rows):
     return out
 
 
+def mismatch(con, oracle_sql: str, df) -> str | None:
+    """The driver's compare of Spark DataFrame ``df`` against DuckDB
+    ``oracle_sql`` on ``con``: row count, column names, then canonical
+    values (order-insensitive). Returns what differs, or None."""
+    spark_rows = [tuple(r) for r in df.collect()]
+    res = con.execute(oracle_sql)
+    duck_cols = [d[0] for d in res.description]
+    duck_rows = res.fetchall()
+    if len(spark_rows) != len(duck_rows):
+        return f"rowcount spark={len(spark_rows)} duck={len(duck_rows)}"
+    if sorted(df.columns) != sorted(duck_cols):
+        return f"cols spark={sorted(df.columns)} duck={sorted(duck_cols)}"
+    a = _canon_rows(df.columns, spark_rows)
+    b = _canon_rows(duck_cols, duck_rows)
+    if a == b:
+        return None
+    diffs = [(x, y) for x, y in zip(a, b) if x != y]
+    only_a = [r for r in a if r not in set(b)][:2]
+    only_b = [r for r in b if r not in set(a)][:2]
+    return (
+        f"values differ ({len(diffs)} rows); first: {diffs[0]}; "
+        f"spark-only={only_a} duck-only={only_b}"
+    )
+
+
+def connect(sf_dir: str):
+    """A DuckDB connection with one view per table of ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
     spark = get_spark("check-correctness")
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings".split()
-    ):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-
+    con = connect(sf_dir)
     qs = queries()
     oracles = oracle_sql()
     failures = []
@@ -67,47 +94,18 @@ def main() -> int:
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir)
-            spark_rows = sdf.collect()
-            spark_cols = sdf.columns
+            if name not in oracles:
+                print(f"ok   {name}: rows-only ({len(sdf.collect())} rows, "
+                      f"{time.time()-t0:.1f}s)")
+                continue
+            problem = mismatch(con, oracles[name], sdf)
         except Exception as e:  # noqa: BLE001
-            print(f"FAIL {name}: spark error: {e}")
-            failures.append(name)
-            continue
-        if name not in oracles:
-            print(f"ok   {name}: rows-only ({len(spark_rows)} rows, "
-                  f"{time.time()-t0:.1f}s)")
-            continue
-        try:
-            res = con.execute(oracles[name])
-            duck_cols = [d[0] for d in res.description]
-            duck_rows = res.fetchall()
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL {name}: duckdb error: {e}")
-            failures.append(name)
-            continue
-        problems = []
-        if len(spark_rows) != len(duck_rows):
-            problems.append(f"rowcount spark={len(spark_rows)} duck={len(duck_rows)}")
-        if sorted(spark_cols) != sorted(duck_cols):
-            problems.append(f"cols spark={sorted(spark_cols)} duck={sorted(duck_cols)}")
-        if not problems:
-            a = _canon_rows(spark_cols, [tuple(r) for r in spark_rows])
-            b = _canon_rows(duck_cols, duck_rows)
-            if a != b:
-                diffs = [(x, y) for x, y in zip(a, b) if x != y]
-                problems.append(
-                    f"values differ ({len(diffs)} rows); first: "
-                    f"{diffs[0] if diffs else '(row set mismatch)'}"
-                )
-                only_a = [r for r in a if r not in set(b)][:2]
-                only_b = [r for r in b if r not in set(a)][:2]
-                if only_a or only_b:
-                    problems.append(f"spark-only={only_a} duck-only={only_b}")
-        if problems:
-            print(f"FAIL {name}: " + "; ".join(problems))
+            problem = f"{type(e).__name__}: {e}"
+        if problem:
+            print(f"FAIL {name}: {problem}")
             failures.append(name)
         else:
-            print(f"PASS {name} ({len(spark_rows)} rows, {time.time()-t0:.1f}s)")
+            print(f"PASS {name} ({time.time()-t0:.1f}s)")
 
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
     return 1 if failures else 0

@@ -1,80 +1,54 @@
-"""Print the registry-rotation state for the next round.
+"""Report the registry-rotation state the driver will sample.
 
-Reads every CORRECTNESS_r*.json in the repo root and reports, against
-the current registry:
-- the ``_LAST_VERIFIED`` dict to paste into queries/__init__.py (query →
-  latest round with a full rows+schema+hash pass),
+Reads every CORRECTNESS_r*.json in the repo root through
+``queries.latest_verdicts`` (the same verdicts ``queries()`` orders by)
+and reports, against the current registry:
+- red rows (checked but not fully green — fix before anything else),
 - rows-only runs (err == 'no_oracle') as a SEPARATE category — they are
   weaker verdicts and must not rotate out of the prefix as if
   hash-verified,
-- red rows (checked but not fully green — fix before anything else),
-- queries with NO driver verdict yet (must lead the registry),
-- whether the must-verify set fits the driver's ~50-entry prefix.
+- queries with NO driver verdict yet,
+- whether that must-verify set fits the driver's ~50-entry prefix, and
+  the last-verified round of the greens that fill the rest of it.
 
 Usage: python tools/registry_rotation.py
 """
 
 from __future__ import annotations
 
-import json
 import sys
+from collections import Counter
 from pathlib import Path
 
-ROOT = Path(__file__).resolve().parent.parent
-sys.path.insert(0, str(ROOT))
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+
+PREFIX = 50
 
 
 def main() -> int:
-    from nyc_opendata_etl_spark.queries import REGISTRY, _load_all
+    from nyc_opendata_etl_spark.queries import _ordered, latest_verdicts
 
-    _load_all()
-    registry = list(REGISTRY)
-    last_green: dict[str, int] = {}
-    last_rows_only: dict[str, int] = {}
-    last_red: dict[str, int] = {}
-    for f in sorted(ROOT.glob("CORRECTNESS_r*.json")):
-        rnd = int(f.stem.split("_r")[-1])
-        for name, row in json.loads(f.read_text()).items():
-            # a later round's verdict supersedes an earlier one
-            if row.get("hash_match"):
-                last_green[name] = rnd
-                last_rows_only.pop(name, None)
-                last_red.pop(name, None)
-            elif row.get("err") == "no_oracle" and row.get("spark_rows") is not None:
-                last_rows_only[name] = rnd
-                last_red.pop(name, None)
-            else:
-                last_red[name] = rnd
-                last_green.pop(name, None)
-                last_rows_only.pop(name, None)
-
-    reg_pos = {n: i for i, n in enumerate(registry)}
-    print(f"registry: {len(registry)} queries")
-    print("\n_LAST_VERIFIED (full hash pass) — paste into queries/__init__.py:")
-    for n, rnd in sorted(
-        last_green.items(), key=lambda kv: (kv[1], reg_pos.get(kv[0], 10**6))
+    order = list(_ordered())
+    verdicts = latest_verdicts()
+    print(f"registry: {len(order)} queries")
+    for kind, what in (
+        ("red", "fix first, they lead the order"),
+        ("rows-only", "weak verdict, kept at the front"),
+        (None, "no verdict on record, kept at the front"),
     ):
-        if n in reg_pos:
-            print(f'    "{n}": {rnd},')
-    rows_only = [n for n in registry if n in last_rows_only]
-    print(f"\nrows-only (weak verdict, keep near the front) ({len(rows_only)}):")
-    for n in rows_only:
-        print(f"    {n}  (last rows-only pass r{last_rows_only[n]})")
-    red = [n for n in registry if n in last_red]
-    print(f"\nred ({len(red)}) — fix first, keep at the very front:")
-    for n in red:
-        print(f"    {n}  (r{last_red[n]})")
-    seen = set(last_green) | set(last_rows_only) | set(last_red)
-    unchecked = [n for n in registry if n not in seen]
-    print(f"\nnever-checked ({len(unchecked)}) — must lead the registry:")
-    for n in unchecked:
-        print(f"    {n}")
-    cap = 50
-    need = len(red) + len(unchecked) + len(rows_only)
+        names = [n for n in order if verdicts.get(n, (None, 0))[0] == kind]
+        print(f"\n{kind or 'never-checked'} ({len(names)}) — {what}:")
+        for n in names:
+            print(f"    {n}" + (f"  (r{verdicts[n][1]})" if kind else ""))
+    need = sum(verdicts.get(n, (None, 0))[0] != "green" for n in order)
+    greens = Counter(
+        verdicts[n][1] for n in order[need:PREFIX] if n in verdicts
+    )
     print(
         f"\nprefix budget: {need} queries need a (re)verdict; driver checks "
-        f"~{cap} per round → {'fits' if need <= cap else 'DOES NOT FIT — defer some'};"
-        f" {cap - need if need <= cap else 0} slots left for stalest greens"
+        f"~{PREFIX} per round → {'fits' if need <= PREFIX else 'DOES NOT FIT'};"
+        f" the other {max(PREFIX - need, 0)} slots go to the stalest greens "
+        f"(last verified: {', '.join(f'r{r}×{c}' for r, c in sorted(greens.items()))})"
     )
     return 0
 
